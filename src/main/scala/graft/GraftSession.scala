@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's standard config: AQE on, UTC,
   * shuffle parallelism matched to local cores (not the 200 default —
   * on a real cluster this is sized to executors × cores instead).
+  * The one place a `SparkSession` is built: the CLI, `Bench`, `Verify`
+  * and the specs all come through here.
   */
 object GraftSession {
   def local(app: String, cores: Int = 32): SparkSession = {
@@ -27,6 +29,18 @@ object GraftSession {
       // long and convert in Tables.normalizeTs
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Spark's generated-code cache is keyed by (class loader, source).
+      // With artifact isolation on (the default), every session UUID gets
+      // its own executor class loader — each `newSession()` and each
+      // streaming query's cloned session — so task-side classes would
+      // never hit the cache across sessions (~280 recompiles per warm
+      // near-dup ingest). The engine adds no session artifacts (no
+      // `addArtifact` anywhere), so one shared loader loses nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // One cold near-dup ingest alone needs ~150 entries; the default
+      // 100 thrashed (~220 recompiles per warm ingest with a shared
+      // loader). Static: it holds only if set before the first session.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

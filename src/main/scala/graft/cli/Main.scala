@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Housekeeping, Tables}
 import graft.io.CompatIo
 import graft.operators._
 
@@ -52,7 +52,19 @@ object Main {
       sys.error("--output required: " + usage))
     lazy val docs = readDocs(spark, input)
     lazy val emb = spark.read.parquet(input) // embeddings jobs
-    val result: DataFrame = job match {
+    def write(result: DataFrame): Unit =
+      opts.getOrElse("format", "parquet") match {
+        case "ref-csv" =>
+          CompatIo.writeRefCsv(result, refCols(job, result), output,
+            perDoc = opts.contains("per-doc"))
+        case _ =>
+          result.write.mode(SaveMode.Overwrite).parquet(output)
+      }
+    // operators persist() intermediates they read more than once (the
+    // TF table, shingle sets); a cached plan over the input path keeps
+    // serving the old rows after the files change, so release them once
+    // the result is written
+    try write(job match {
       case "sim-topk" =>
         Similarity.bruteTopK(
           emb.filter(org.apache.spark.sql.functions.col("vec_id") %
@@ -115,14 +127,8 @@ object Main {
             opts.getOrElse("query-every", "50").toInt === 0), emb,
           k = opts.getOrElse("k", "10").toInt)
       case other => sys.error(s"unknown job '$other'. " + usage)
-    }
-    opts.getOrElse("format", "parquet") match {
-      case "ref-csv" =>
-        CompatIo.writeRefCsv(result, refCols(job, result), output,
-          perDoc = opts.contains("per-doc"))
-      case _ =>
-        result.write.mode(SaveMode.Overwrite).parquet(output)
-    }
+    })
+    finally Housekeeping.release(spark)
   }
 
   /** Reference column orders for the ref-csv format (FIXTURES.md §A).
@@ -138,12 +144,16 @@ object Main {
     case _ => df.columns.toSeq
   }
 
-  /** Parquet documents table or wikiextractor text lines, by extension. */
+  /** Parquet documents table or wikiextractor text lines, by extension.
+    * Text input may be one file or a whole wikiextractor output tree
+    * (`text/AA/wiki_00`, `text/AB/wiki_00`, ...): the lookup descends
+    * into subdirectories, where a plain directory read finds nothing. */
   def readDocs(spark: SparkSession, input: String): DataFrame =
     if (input.endsWith(".parquet"))
       spark.read.parquet(input)
     else {
-      val parsed = WikiText.parse(spark.read.text(input))
+      val parsed = WikiText.parse(
+        spark.read.option("recursiveFileLookup", "true").text(input))
       parsed.select(parsed("doc_id"), parsed("body").as("text"))
     }
 

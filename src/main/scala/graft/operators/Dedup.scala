@@ -449,13 +449,15 @@ object Dedup {
     }
     val bandF = Future {
       bandSigs.join(ids, "doc_id")
-        // REBALANCE only resolves under AQE, and foreachBatch closures
-        // run on the micro-batch's CLONED session where AQE is forced
-        // off — the r13 hint was silently dropped here ("Unrecognized
-        // hint" in the logs), landing tasks × bands tiny files per
-        // append. A hash repartition by the partition column works
-        // without AQE and the frame is delta-sized, so the extra
-        // exchange is one tiny shuffle (guide §6 small-files)
+        // cluster by the partition column so each band dir gets one
+        // file per append, not tasks × bands tiny ones (guide §6
+        // small-files). An explicit hash repartition, not the REBALANCE
+        // hint dedupIndexWrite uses: it holds whatever the session's AQE
+        // setting, and the frame is delta-sized, so the extra exchange
+        // is one tiny shuffle. (The jobs a foreachBatch closure starts
+        // do run under AQE on Spark 4.1.2 — AdaptiveSparkPlan with
+        // AQEShuffleRead — though the streaming query logs that AQE is
+        // disabled for it.)
         .repartition(col("band"))
         .write.mode("append").partitionBy("band")
         .parquet(s"$dir/bands")

@@ -1044,7 +1044,10 @@ object EventsStream {
       }
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$resDir/b*")
+    // the per-batch dirs resDir/b<id> read as one tree: a `b*` glob path
+    // sends the file source probing for a sink metadata dir under the
+    // literal glob, which logs a FileNotFoundException trace per call
+    spark.read.option("recursiveFileLookup", "true").parquet(resDir)
   }
 
   /** Streaming-maintained BLOOM skipping index — the [[neardupIngest]]
@@ -1167,7 +1170,7 @@ object EventsStream {
       }
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$resDir/b*")
+    spark.read.option("recursiveFileLookup", "true").parquet(resDir)
   }
 
   def lrScoreIngest(spark: SparkSession, dir: String, stageDir: String,
@@ -1200,7 +1203,7 @@ object EventsStream {
       }
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$resDir/b*")
+    spark.read.option("recursiveFileLookup", "true").parquet(resDir)
   }
 
   /** Streaming-maintained uniform fixed-size sample — the

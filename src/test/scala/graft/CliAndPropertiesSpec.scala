@@ -50,6 +50,53 @@ class CliAndPropertiesSpec extends SparkSpec {
     assert(rows.length == 5)
   }
 
+  test("CLI: a job run twice in one session over a rewritten dump reads " +
+    "the new input (tfidf, dedup-jaccard)") {
+    val wiki = Files.createTempFile("wiki_rw", ".txt")
+    def runOver(job: String, docs: String*) = {
+      Files.write(wiki, java.util.Arrays.asList(docs: _*))
+      val out = tmpDir(s"${job}_rw")
+      cli.Main.run(spark, job, Map("input" -> wiki.toString, "output" -> out))
+      spark.read.parquet(out)
+    }
+    def tfidfWords(docs: String*): Seq[String] =
+      runOver("tfidf", docs: _*).select("word").as[String].collect()
+        .toSeq.sorted
+    // every word sits in one of the two docs: idf = round2(log10 2) > 0
+    assert(tfidfWords(
+      """<doc id="1" url="u" title="A">alpha alpha beta</doc>""",
+      """<doc id="2" url="u" title="B">gamma gamma delta</doc>""") ==
+      Seq("alpha", "betadoc", "deltadoc", "gamma"))
+    assert(tfidfWords(
+      """<doc id="1" url="u" title="A">kappa kappa lambda</doc>""",
+      """<doc id="2" url="u" title="B">omega omega sigma</doc>""") ==
+      Seq("kappa", "lambdadoc", "omega", "sigmadoc"))
+    val (same, other) = ("the quick brown fox jumps over the lazy dog",
+      "a completely unrelated sentence about something else entirely")
+    def pairs(texts: String*): Seq[String] =
+      runOver("dedup-jaccard", texts.zipWithIndex.map { case (t, i) =>
+        s"""<doc id="${i + 1}" url="u" title="T">$t</doc>""" }: _*)
+        .select("doc_a", "doc_b").collect()
+        .map(r => s"${r.get(0)}-${r.get(1)}").toSeq.sorted
+    assert(pairs(same, same, other) == Seq("1-2"))
+    assert(pairs(same, other, same) == Seq("1-3"))
+  }
+
+  test("CLI: a wikiextractor output tree is read through its " +
+    "subdirectories") {
+    val root = Files.createTempDirectory("wiki_tree")
+    Seq("AA" -> Seq(1, 2), "AB" -> Seq(3)).foreach { case (sub, ids) =>
+      val d = Files.createDirectories(root.resolve(sub))
+      Files.write(d.resolve("wiki_00"), java.util.Arrays.asList(ids.map(i =>
+        s"""<doc id="$i" url="u" title="T$i">word$i other words</doc>"""): _*))
+    }
+    val out = tmpDir("tree_out")
+    cli.Main.run(spark, "tf", Map(
+      "input" -> root.toString, "output" -> out))
+    assert(spark.read.parquet(out).select("doc_id").distinct()
+      .as[String].collect().toSeq.sorted == Seq("1", "2", "3"))
+  }
+
   test("CLI: flat ref-csv tf output carries doc_id, ordered per doc") {
     val wiki = Files.createTempFile("wiki2", ".txt")
     Files.write(wiki, java.util.Arrays.asList(

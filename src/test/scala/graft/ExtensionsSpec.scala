@@ -313,6 +313,33 @@ class ExtensionsSpec extends SparkSpec {
     assert(topk.head == (5L, 1L))
   }
 
+  test("generated code is reused across sessions: a second " +
+    "newSession() compiles no class for the same query") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def materialize(s: org.apache.spark.sql.SparkSession): Unit = {
+      val d = s.createDataFrame(Seq((1L, base), (2L, base.toUpperCase),
+        (3L, "one two three four five"))).toDF("doc_id", "text")
+      val sh = Dedup.shingles(d)
+      sh.join(sh.groupBy("s").agg(count(lit(1)).as("n")), "s")
+        .write.format("noop").mode("overwrite").save()
+    }
+    materialize(spark.newSession())
+    // 150 distinct one-class plans in between: a 100-entry code cache
+    // would evict the first session's classes before the second asks
+    (1 to 150).foreach(i => spark.range(1).selectExpr(s"id * $i + $i")
+      .write.format("noop").mode("overwrite").save())
+    val second = spark.newSession()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    materialize(second)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+    // the setting that lets executor-side classes hit the cache: one
+    // class loader for every session instead of one per session UUID
+    assert(second.conf.get("spark.sql.artifact.isolation.enabled") ==
+      "false")
+    assert(spark.sparkContext.getConf
+      .get("spark.sql.codegen.cache.maxEntries") == "1000")
+  }
+
   test("streaming hourly == batch hourly on sf0.001") {
     val dir = "/root/testdata/sf0.001"
     val streamed = rows(graft.streaming.EventsStream.hourlyCounts(spark, dir))
