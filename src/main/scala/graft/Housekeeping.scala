@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Session housekeeping between independent query runs: several
@@ -18,10 +20,12 @@ object Housekeeping {
     // Sweep every persistent RDD still registered after clearCache —
     // anything the CacheManager owned is already gone, the rest is
     // checkpoint debris of the JUST-FINISHED query (callers release
-    // between queries, never mid-plan).
+    // between queries, never mid-plan). A failed unpersist of one RDD
+    // must not stop the sweep; an interrupt or a fatal error must
+    // still propagate (the CLI releases after every job).
     spark.sparkContext.getPersistentRDDs.values
       .foreach(r => try r.unpersist(blocking = false)
-        catch { case _: Throwable => () })
+        catch { case NonFatal(_) => () })
     spark.catalog.listTables().collect()
       .filter(t => t.isTemporary && (t.name.startsWith("graft_stream_") ||
         t.name.startsWith("graft_rollup_") || t.name.startsWith("graft_cube_")))

@@ -86,13 +86,7 @@ object SparkEntry {
     val root = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
       s"graft_${tag}_${ProcessHandle.current().pid()}")
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.streaming.EventsStream.deleteTree(root.toString)
     java.nio.file.Files.createDirectories(root)
     java.nio.file.Files.createTempDirectory(root, "run").toString
   }
@@ -7660,7 +7654,7 @@ object SparkEntry {
         |  event_type, count(*) AS n_events
         |FROM kept GROUP BY 1, 2""".stripMargin,
 
-    // Append-mode finalization replay (probed by tools/AppendProbe):
+    // Append-mode finalization replay (pinned by Round16Spec):
     // kept rows follow stream_late_drop's rule (batch 2 filtered
     // against W0 = max(ts over batch 0) - 1 min, equality drops);
     // the final no-data micro-batch then applies the watermark from

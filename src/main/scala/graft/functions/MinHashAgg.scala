@@ -20,12 +20,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * yields the identical final pair set.
   */
 class MinHashAgg(numPerm: Int)
-    extends Aggregator[(String, Long), Array[Long], Array[Long]] {
+    extends Aggregator[Long, Array[Long], Array[Long]] {
 
   override def zero: Array[Long] = Array.fill(numPerm)(Long.MaxValue)
 
-  override def reduce(buf: Array[Long], in: (String, Long)): Array[Long] = {
-    val h0 = in._2
+  override def reduce(buf: Array[Long], h0: Long): Array[Long] = {
     var p = 0
     while (p < numPerm) {
       val h = XXH64.hashLong(h0, p.toLong)

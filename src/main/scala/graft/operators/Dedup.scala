@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -210,26 +210,21 @@ object Dedup {
     * ((doc) → Array[Long](numPerm) of per-perm mins; shingles
     * pre-hashed to longs with codegen'd xxhash64 so the aggregation
     * exchange carries the hash, not the string), then per-band slice
-    * hashes. Keys travel as strings (doc_id can be any type — ANSI
-    * long-casts would throw on wikitext string ids) and map back to
-    * the original ids after. Output: (doc_id, band, sig).
+    * hashes. Grouped on doc_id itself, whatever its type (wikitext
+    * ids are strings), so `sh` is scanned ONCE: a second scan of a
+    * persisted `sh` runs as a concurrent job whose tasks block on the
+    * first one's cached partitions. Null ids yield no signature.
+    * Output: (doc_id, band, sig).
     */
   private[graft] def bandSignatures(sh: DataFrame, numPerm: Int,
                                     bands: Int): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val rowsPerBand = numPerm / bands
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val sigsByKey = sh.select(col("doc_id").cast("string").as("k"),
-        xxhash64(col("s")).as("h0"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .agg(new graft.functions.MinHashAgg(numPerm).toColumn.name("sig"))
-      .toDF("k", "sig")
-    val ids = sh.select(col("doc_id")).distinct()
-      .withColumn("k", col("doc_id").cast("string"))
-    val sigs = sigsByKey.join(ids, "k").select("doc_id", "sig")
-    sigs
+    val minHash = udaf(new graft.functions.MinHashAgg(numPerm),
+      Encoders.scalaLong)
+    sh.filter(col("doc_id").isNotNull)
+      .groupBy(col("doc_id"))
+      .agg(minHash(xxhash64(col("s"))).as("sig"))
       .select(col("doc_id"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
       .select(col("doc_id"), col("band"),

@@ -92,13 +92,13 @@ class FunctionsSpec extends SparkSpec {
     }
     val agg = new MinHashAgg(16)
     val s1 = Seq("a b c", "b c d", "c d e").map(h0)
-    val b1 = s1.foldLeft(agg.zero)((b, s) => agg.reduce(b.clone(), ("1", s)))
+    val b1 = s1.foldLeft(agg.zero)((b, s) => agg.reduce(b.clone(), s))
     val b2 = s1.reverse.foldLeft(agg.zero)((b, s) =>
-      agg.reduce(b.clone(), ("2", s)))
+      agg.reduce(b.clone(), s))
     assert(b1.toSeq == b2.toSeq) // order-independent
-    val b3 = agg.merge(agg.reduce(agg.zero, ("1", h0("a b c"))),
-      agg.reduce(agg.zero, ("1", h0("x y z"))))
+    val b3 = agg.merge(agg.reduce(agg.zero, h0("a b c")),
+      agg.reduce(agg.zero, h0("x y z")))
     assert(b3.toSeq == Seq(h0("a b c"), h0("x y z"))
-      .foldLeft(agg.zero)((b, s) => agg.reduce(b, ("1", s))).toSeq)
+      .foldLeft(agg.zero)((b, s) => agg.reduce(b, s)).toSeq)
   }
 }

@@ -544,17 +544,14 @@ class Round16Spec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_appendspec_").toString
     graft.streaming.EventsStream.stageBatches(dir, b0, b1, b2)
-    val schema = spark.read.parquet(s"$dir/b00.parquet").schema
-    val out = graft.streaming.EventsStream.runToMemoryProbe(spark, s =>
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "b*.parquet")
-        .parquet(dir)
+    val out = graft.streaming.EventsStream.runToMemory(spark, s =>
+      graft.streaming.EventsStream.stagedSource(s, dir)
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(date_format(col("window.start"), "HH:mm").as("hour"),
-          col("event_type"), col("n_events")))
+          col("event_type"), col("n_events")),
+      "appendspec", "append")
     // 10:00 finalized with the in-time rows only (id3 dropped late);
     // 11:00 had only late rows → no state, nothing emitted;
     // 12:00 finalized by the final no-data batch's watermark (14:29);
