@@ -47,35 +47,46 @@ object GraftSession {
     s
   }
 
-  /** Every streaming query logs two known-benign WARN lines from
-    * `ResolveWriteToStream`, which bury new warnings:
+  /** Streaming queries log known-benign WARN lines that bury new
+    * warnings. From `ResolveWriteToStream`, on every query:
     *  - `Temporary checkpoint location created ...` — a query without
     *    a `checkpointLocation` (all but the resume gate's) drains
     *    through a temp dir that is deleted once it stops;
     *  - `spark.sql.adaptive.enabled is not supported in streaming
     *    DataFrames/Datasets and will be disabled` — misleading here:
     *    the jobs a `foreachBatch` body starts do run under AQE.
-    * A filter on that logger drops exactly these two; its other
-    * warnings (say, a failed checkpoint-exists probe) still show. */
+    * From `MicroBatchExecution`, on every stateful query (windowed
+    * aggregation, `dropDuplicates`, stream-stream join):
+    *  - `Disabling AQE since AQE is not supported in stateful
+    *    workloads.` — by design: state-store partitions must keep the
+    *    checkpoint's shuffle partition count, which AQE would change.
+    * A filter on each logger drops exactly these messages; the loggers'
+    * other warnings (say, a failed checkpoint-exists probe) still show. */
   private def quietStreamingWarnings(): Unit = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LoggerContext}
     import org.apache.logging.log4j.core.config.LoggerConfig
     import org.apache.logging.log4j.core.filter.RegexFilter
-    val name =
-      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val conf = ctx.getConfiguration
-    if (!conf.getLoggers.containsKey(name)) {
-      // null level: the logger keeps inheriting the root's level
-      val lc = new LoggerConfig(name, null, true)
-      lc.addFilter(RegexFilter.createFilter(
-        "(?s)(Temporary checkpoint location created |" +
+    Seq(
+      "ResolveWriteToStream" ->
+        ("(?s)(Temporary checkpoint location created |" +
           "spark\\.sql\\.adaptive\\.enabled is not supported in " +
-          "streaming ).*",
-        null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
-      conf.addLogger(name, lc)
-      ctx.updateLoggers()
+          "streaming ).*"),
+      "MicroBatchExecution" ->
+        ("(?s)Disabling AQE since AQE is not supported in stateful " +
+          "workloads\\..*")
+    ).foreach { case (cls, regex) =>
+      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+      if (!conf.getLoggers.containsKey(name)) {
+        // null level: the logger keeps inheriting the root's level
+        val lc = new LoggerConfig(name, null, true)
+        lc.addFilter(RegexFilter.createFilter(
+          regex, null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+        conf.addLogger(name, lc)
+        ctx.updateLoggers()
+      }
     }
   }
 }

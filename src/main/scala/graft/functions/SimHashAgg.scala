@@ -35,14 +35,14 @@ object SimHashAgg {
   * a single ObjectHashAggregate pass replaces a 64× explode + two extra
   * shuffles.
   */
-class SimHashAgg extends Aggregator[(String, String, Long), Array[Long], Long] {
+class SimHashAgg extends Aggregator[(String, Long), Array[Long], Long] {
 
   override def zero: Array[Long] = new Array[Long](64)
 
   override def reduce(buf: Array[Long],
-                      in: (String, String, Long)): Array[Long] = {
-    val h = SimHashAgg.wordBasis(in._2)
-    val cnt = in._3
+                      in: (String, Long)): Array[Long] = {
+    val h = SimHashAgg.wordBasis(in._1)
+    val cnt = in._2
     var j = 0
     while (j < 64) {
       if (((h >>> j) & 1L) == 1L) buf(j) += cnt else buf(j) -= cnt

@@ -163,10 +163,10 @@ object Classify {
     * rate `lr` against the binary label `lang = 'en'` (the gate's
     * stand-in for any quality label — production feeds human/LM
     * judgments through the same plan). Measured caveat on the gate
-    * data (tools/LrProbe): the driver testdata draws every language
-    * from ONE shared vocabulary, so no lexical model can beat the
-    * majority response on this label (nb_eval's non-en F1 ≤ 0.23 is
-    * the same finding) — the gates pin the machinery and the
+    * data (BASELINE.md learnability table): the driver testdata draws
+    * every language from ONE shared vocabulary, so no lexical model
+    * can beat the majority response on this label (nb_eval's non-en
+    * F1 ≤ 0.23 is the same finding) — the gates pin the machinery and the
     * bit-exact replay; on separable data the same loop reaches
     * accuracy 1.0 by step 2 (LrProbe + Round25Spec). Weights start
     * at 0 and update

@@ -511,25 +511,19 @@ object Dedup {
   }
 
   /** 64-bit SimHash signature per document over normalized word unigrams,
-    * via the one-pass [[graft.functions.SimHashAgg]] (no 64× explode).
-    * Output: (doc_id, simhash).
+    * via the one-pass [[graft.functions.SimHashAgg]] (no 64× explode),
+    * grouped on doc_id itself (the [[bandSignatures]] shape). Null ids
+    * yield no signature. Output: (doc_id, simhash).
     */
   def simHash(docs: DataFrame, idCol: String = "doc_id",
               textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val counts = WikiText.tokens(docs, idCol, textCol)
+    val simHashAgg = udaf(new graft.functions.SimHashAgg(),
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+    WikiText.tokens(docs, idCol, textCol)
+      .filter(col("doc_id").isNotNull)
       .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
-    // string-keyed for id-type generality (see minHashLsh)
-    val byKey = counts
-      .select(col("doc_id").cast("string").as("k"), col("word"), col("cnt"))
-      .as[(String, String, Long)]
-      .groupByKey(_._1)
-      .agg(new graft.functions.SimHashAgg().toColumn.name("simhash"))
-      .toDF("k", "simhash")
-    val ids = counts.select(col("doc_id")).distinct()
-      .withColumn("k", col("doc_id").cast("string"))
-    byKey.join(ids, "k").select("doc_id", "simhash")
+      .groupBy(col("doc_id"))
+      .agg(simHashAgg(col("word"), col("cnt")).as("simhash"))
   }
 
   /** Benchmark decontamination — the eval-leak check of a training-data
@@ -568,7 +562,7 @@ object Dedup {
     * spent more per corpus shingle on string decimal conversion than
     * the whole exact join's exchange cost locally).
     *
-    * WHEN IT WINS — measured (tools/BloomProbe, K=30 clones, broadcast
+    * WHEN IT WINS — measured (BASELINE.md Bloom, K=30 clones, broadcast
     * disabled, 4-gram shingles, ~7M corpus shingle rows): the prefilter
     * cuts bytes crossing the exchange 90% (170 MB → 17 MB) but spends
     * extra per-shingle CPU, so on local[32] — where the "exchange" is
@@ -897,7 +891,7 @@ object Dedup {
     // at t≥0.85 with a 1e-3 budget derives r=4 at 64 planes (random-
     // pair candidate rate ~0.64); REAL pruning needs r=8, which the
     // miss budget only admits at nPlanes=256 (rate ~0.12) — raise
-    // nPlanes alongside the threshold (tools/BandProbe sweeps this).
+    // nPlanes alongside the threshold (BASELINE.md banding sweep).
     val p = 1.0 - math.acos(math.min(1.0, threshold)) / math.Pi
     val r = Seq(16, 8, 4, 2, 1).filter(nPlanes % _ == 0).find { rr =>
       math.pow(1.0 - math.pow(p, rr), nPlanes.toDouble / rr) < bandMissProb
@@ -1314,14 +1308,14 @@ object Dedup {
     * block near-identical content by
     * [[Similarity.knnComponentsIvf]]'s density components (measured
     * recall 2.6–4.7× the sign buckets, cluster purity 0.446 vs 0.366 —
-    * tools/IvfKnnProbe, tools/ClusterProbe tables in BASELINE.md) and
+    * the kNN-blocking and cluster-quality tables in BASELINE.md) and
     * within each component run [[semanticDedupBest]]'s keep-best
     * pairwise duel: drop a member iff some SAME-COMPONENT member at
     * cosine >= `threshold` strictly beats it on (quality, then lower
     * id) — the cosine verify keeps the collapse rule identical to the
     * centroid-bucket arm, only the BLOCKING changes, which is what
     * makes the two arms' measured dup-pairs-found / false-collapse
-    * rates comparable (tools/SemDedupProbe table in BASELINE.md).
+    * rates comparable (semantic-dedup table in BASELINE.md).
     * Vectors with no mutual edge are singletons by construction and
     * are implicitly kept — they do not appear in the output (the graph
     * rows are the dup signal; the [[Similarity.knnComponentsIvf]]
@@ -1337,7 +1331,7 @@ object Dedup {
     * kNN machinery (16-of-128 routing, k·n edge list, min-label
     * fixpoint); the duel is a component-keyed self-join whose
     * expansion is bounded by component size — reciprocal-kNN
-    * components at k=2 stay small by construction (tools/KnnProbe),
+    * components at k=2 stay small by construction (one-off probe),
     * orders tighter than the centroid arm's 1/nClusters-of-corpus
     * buckets. Verification happens IN the join condition (invariant
     * 10: no distinct over an unverified expansion).

@@ -334,7 +334,7 @@ object Graph {
     * Relative (not absolute) tolerance on purpose: with damping 0.85
     * the residual contracts ~0.85× per round INDEPENDENT of graph
     * size (measured: Δ ratios 0.849±0.001 at sf0.001/0.01/0.1,
-    * tools/PrProbe), so rounds-to-tol is a property of the divisor
+    * one-off probe), so rounds-to-tol is a property of the divisor
     * alone — div 3 ⇒ 8 rounds at every test SF — while an absolute
     * micro-mass tol scales with per-node mass (1/n) and would need
     * per-SF retuning plus a 30+-round unroll at [[pageRankFixpoint]]'s
@@ -552,7 +552,7 @@ object Graph {
     * propagation is bit-deterministic, so the twin unrolls `maxRounds`
     * label steps, counts per-round diffs, and picks the first
     * zero-change round. Measured fixpoint on the purchase graph: 3/4/5
-    * rounds at sf0.001/0.01/0.1 (tools/CcProbe) — cap 8 covers with
+    * rounds at sf0.001/0.01/0.1 (one-off probe) — cap 8 covers with
     * margin, and if a graph ever exceeded the cap both engines would
     * agree on the capped state anyway.
     * Output: (node_type, key, component, rounds).
@@ -614,7 +614,7 @@ object Graph {
           lit(" on node "), col("node").cast("string"))))
         .otherwise(col("lbl")).as("lbl"))
     val edges = warm(edges0.persist()) // per-round join, warm once
-    // The struct argmax is the MEASURED winner (tools/LpaProbe,
+    // The struct argmax is the MEASURED winner (BASELINE.md LPA table,
     // interleaved same-JVM reps on the sf0.1 purchase graph): struct
     // ~9.2 s, single-BIGINT packed key ~11.6 s, packed+broadcast-labels
     // ~9.6 s for 3 rounds — ObjectHashAggregate on the 2-field struct
@@ -882,7 +882,7 @@ object Graph {
     * with the in-plan mean-degree threshold until the keep set stops
     * shrinking ([[kCoreFixpoint]]'s monotone-count rule — equal count
     * ⟺ equal set), rounds_executed in the output. Measured fixpoint: 2
-    * rounds (1 peel + 1 verify) at every test SF (tools/CcProbe) —
+    * rounds (1 peel + 1 verify) at every test SF (one-off probe) —
     * the mean-degree core is shallow on this graph; cap 6 covers any
     * cascade the testdata could produce, and past the cap both
     * engines agree on the capped state.
@@ -967,7 +967,7 @@ object Graph {
     * backs with a bitmap/Bloom). On a saturating graph the frontier
     * empties and later rounds cost ~nothing, where the full-set form
     * re-joins the ENTIRE reached set against the edge list every
-    * round — measured in tools/BfsProbe (BASELINE.md). Emits exactly
+    * round — measured in BASELINE.md's BFS table. Emits exactly
     * [[bfsHops]]'s output (the fixed-round gate semantics; the spec
     * pins equality), and the rel_bfs_frontier gate shares
     * rel_bfs_hops' unrolled twin.
@@ -1147,8 +1147,8 @@ object Graph {
     * improvements, and the flagged rows become the next delta. On a
     * converging graph the delta empties and later rounds cost
     * ~nothing, where the full-set form re-joins ALL reached nodes
-    * against the edge list every round — measured in tools/SsspProbe
-    * (BASELINE.md). Emits exactly [[ssspBounded]]'s rows (the spec
+    * against the edge list every round — measured in BASELINE.md's
+    * SSSP table. Emits exactly [[ssspBounded]]'s rows (the spec
     * pins equality round for round), so the gate shares the unrolled
     * twin. */
   def ssspBoundedDelta(sources: DataFrame, wedges0: DataFrame,

@@ -1256,13 +1256,13 @@ object Similarity {
     * probed lists align with the neighborhoods being searched — at the
     * 16-of-128 default the routing recovers measurably MORE real
     * neighborhoods than the 8-of-128 point it replaced — re-pinned
-    * from the round-11 frontier sweep (tools/IvfFrontierProbe table in
-    * BASELINE.md: at sf0.1 purity 0.446→0.453 AND coverage
-    * 0.420→0.512 with convergence in 5 rounds instead of 6, for a
-    * 12.5% scanned fraction; 8-of-128 recall itself was 2.6–4.7×
-    * sign-bucket LSH at ~6%, tools/IvfKnnProbe — sign buckets cut the
-    * space by per-DIMENSION signs, which embeddings do not cluster
-    * by). Same O(edges)
+    * from the round-11 frontier sweep (the IVF density-cluster
+    * frontier table in BASELINE.md: at sf0.1 purity 0.446→0.453 AND
+    * coverage 0.420→0.512 with convergence in 5 rounds instead of 6,
+    * for a 12.5% scanned fraction; 8-of-128 recall itself was
+    * 2.6–4.7× sign-bucket LSH at ~6%, BASELINE.md kNN-blocking table
+    * — sign buckets cut the space by per-DIMENSION signs, which
+    * embeddings do not cluster by). Same O(edges)
     * mutual/cosine tail.
     * Output: (u, v, cos) with u < v, round2 cosine. */
   def knnGraphMutualIvf(emb: DataFrame, k: Int = 5,
@@ -1327,9 +1327,9 @@ object Similarity {
     * justifies rebuilding the kNN graph on IVF routing). At the
     * 8-of-128 point the scanned fraction is comparable to the LSH
     * bucket+Hamming-1 probe set (~6% vs ~3.5%) and the measured recall
-    * is 2.6–4.7× across SFs (tools/IvfKnnProbe, BASELINE.md); the
+    * is 2.6–4.7× across SFs (kNN-blocking table, BASELINE.md); the
     * default follows the graph family's re-pinned 16-of-128 operating
-    * point (tools/IvfFrontierProbe) so this eval keeps pricing the
+    * point (BASELINE.md frontier table) so this eval keeps pricing the
     * blocking the gates actually run.
     * Output: (query_id, n_hits, recall). */
   def knnRecallIvf(emb: DataFrame, k: Int = 10, nCentroids: Int = 128,
@@ -1445,7 +1445,7 @@ object Similarity {
     * keyed-join fixpoint the purchase components run at scale.
     *
     * Default k=2: reciprocal-2NN clusters stay small and the fixpoint
-    * lands in 10–13 rounds at every test SF (tools/KnnProbe) — k=5's
+    * lands in 10–13 rounds at every test SF (one-off probe) — k=5's
     * mutual graph on the synthetic embeddings fuses into ONE giant
     * component whose diameter blows past any twin-unrollable cap. If
     * a graph ever exceeds maxRounds, both engines agree on the capped

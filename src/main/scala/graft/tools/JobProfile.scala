@@ -2,11 +2,17 @@ package graft.tools
 
 import scala.collection.mutable
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Throwaway profiler: run ONE SparkEntry query with a listener and
-  * print per-job wall time, stage counts and shuffle bytes — the
-  * guide-§1 "where does the time go" view that the disabled UI would
-  * otherwise give. Usage: runMain graft.tools.JobProfile <query> [dir]
+/** Profile ONE gate: print its formatted physical plan, run it once
+  * untimed (JIT and first-job setup), then once under a listener,
+  * printing per-job wall time, stage and task counts and shuffle bytes
+  * — the "where does the time go" view the disabled UI would otherwise
+  * give. `key=value` args after the sfDir set runtime SQL confs on the
+  * session first, for A/B runs of a conf. Gates that stream or write
+  * artifacts run those steps while their plan is built, before it is
+  * printed.
+  * Usage: runMain graft.tools.JobProfile <gate> [sfDir] [key=value ...]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -14,6 +20,10 @@ object JobProfile {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftSession.local("job-profile", cpus)
+    args.drop(2).foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      spark.conf.set(k, v)
+    }
     val fn = graft.SparkEntry.queries(name)
 
     final case class JobRow(id: Int, var start: Long = 0L,
@@ -52,8 +62,10 @@ object JobProfile {
     }
 
     // one untimed warm run so JIT/first-job setup doesn't pollute the
-    // second run's job profile
-    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    // second run's job profile; its plan is the one printed
+    val warm = fn(spark, dir)
+    println(warm.queryExecution.explainString(FormattedMode))
+    warm.write.format("noop").mode("overwrite").save()
     graft.Housekeeping.release(spark)
 
     spark.sparkContext.addSparkListener(listener)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 
 /** Scale-posture plan invariants, asserted instead of printed (round-8
-  * verdict #6 — tools/ExplainAudit is for human review; this FAILS the
+  * verdict #6 — tools/JobProfile's plan is for human review; this FAILS the
   * build): across the headline gate queries the physical plan must
   * never contain
   *  - a CartesianProduct (an accidental unkeyed join is THE 100 TB

@@ -40,7 +40,7 @@ class Round4Spec extends SparkSpec {
 
   // ---- ANN recall floors vs the exact ranking ----
 
-  // Floors measured by tools/RecallProbe on the sf0.1 fixture (lsh
+  // Floors measured by a one-off recall probe on the sf0.1 fixture (lsh
   // 0.105, ivf 0.500). The synthetic embeddings are near-uniform —
   // the hardest regime for space-partitioning ANN (no cluster structure
   // to exploit; lshTopK probes ~9/256 buckets ≈ 3.5% of the space), so
