@@ -1398,21 +1398,18 @@ object SparkEntry {
          |FROM b GROUP BY doc_id, j""".stripMargin) { (s, dir) =>
       TextStats.hashEmbedBuckets(docs(s, dir))
     },
+    // bigram LM scoring (two-stage c1 aggregation); the _scalable name
+    // is kept registered and runs the same operator
     Gate("text_lm_score", 1.54, lmScoreSql) { (s, dir) =>
       TextStats.lmScore(docs(s, dir))
     },
-    // scale-hardened LM scoring (two-stage c1 aggregation, vocabulary
-    // cutoff available): at minCount=0 its output is pinned — by the
-    // same oracle SQL — to the exact window-based form
-    // at minCount=0 the scalable form is definitionally the same model
-    // (c1 = Σ_w2 c2) — one oracle pins both implementations
     Gate("text_lm_score_scalable", 1.57, lmScoreSql) { (s, dir) =>
-      TextStats.lmScoreScalable(docs(s, dir))
+      TextStats.lmScore(docs(s, dir))
     },
     // LM-as-artifact: train once, persist the (w1,w2,c2,c1) model,
     // score from the RE-READ parquet — the frozen-quality-model path;
     // scoring the training corpus is bit-identical to the in-plan
-    // forms (shared tail), so all three share one oracle
+    // operator (shared tail), so all three share one oracle
     // ...and the third plan on that one oracle: the persisted-model
     // round-trip (train → parquet → re-read → score)
     Gate("text_lm_artifact", 1.99, lmScoreSql) { (s, dir) =>
@@ -3521,15 +3518,14 @@ object SparkEntry {
         |ORDER BY exact_cnt DESC, key ASC LIMIT 5""".stripMargin) { (s, dir) =>
       Relational.heavyHitters(tbl(s, dir, "events"), "event_type")
     },
-    // CDC keep-latest compaction: window baseline vs one-agg scalable
-    // form — same rows, log-sized sort vs state-sized exchange
-    // CDC keep-latest twin — one SQL for BOTH compaction forms: the
-    // window and struct-max plans must emit the identical state table
+    // CDC keep-latest compaction: one struct-max aggregate, state-sized
+    // exchange; the _scalable name is kept registered and runs the same
+    // operator against the same twin
     Gate("rel_compact_latest", 0.31, CompactLatestSql) { (s, dir) =>
       Relational.latestEventState(tbl(s, dir, "events"))
     },
     Gate("rel_compact_latest_scalable", 0.3, CompactLatestSql) { (s, dir) =>
-      Relational.latestEventStateScalable(tbl(s, dir, "events"))
+      Relational.latestEventState(tbl(s, dir, "events"))
     },
     // record-linkage fuzzy join: SymSpell deletion-neighborhood
     // candidates + exact levenshtein<=1 verify over customer names
@@ -3599,9 +3595,9 @@ object SparkEntry {
          |    AND o_v IS NOT DISTINCT FROM n_v)""".stripMargin) { (s, dir) =>
       val ev = tbl(s, dir, "events")
       Relational.snapshotDiff(
-        Relational.latestEventStateScalable(
+        Relational.latestEventState(
           ev.filter(expr("unix_micros(ts) < 1706616000000000"))),
-        Relational.latestEventStateScalable(ev),
+        Relational.latestEventState(ev),
         Seq("user_id", "event_type"))
     },
     // MERGE INTO semantics: the pre-cutoff compacted state is the base
@@ -3644,9 +3640,9 @@ object SparkEntry {
          |WHERE NOT has_d OR op <> 'D'""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.functions.when
       val ev = tbl(s, dir, "events")
-      val base = Relational.latestEventStateScalable(
+      val base = Relational.latestEventState(
         ev.filter(expr("unix_micros(ts) < 1706616000000000")))
-      val delta = Relational.latestEventStateScalable(
+      val delta = Relational.latestEventState(
         ev.filter(expr("unix_micros(ts) >= 1706616000000000")))
         .withColumn("op",
           when(pmod(col("last_event_id"), lit(10)) === 0, lit("D"))
@@ -5523,11 +5519,10 @@ object SparkEntry {
          |WHERE rn <= 10""".stripMargin) { (s, dir) =>
       Sampling.clusterStratifiedSample(tbl(s, dir, "embeddings"))
     },
-    // scalable domain cap: same kept set as samp_cap (same oracle), but
-    // only the boundary hash bucket is sorted — the multi-million-cap
-    // shape; see Sampling.capPerStratumScalable
+    // samp_cap's name twin: the same hash-bucketed cap against the same
+    // oracle (see Sampling.capPerStratum)
     Gate("samp_cap_scalable", 0.64, capSql) { (s, dir) =>
-      Sampling.capPerStratumScalable(docs(s, dir), maxPerStratum = 10)
+      Sampling.capPerStratum(docs(s, dir), maxPerStratum = 10)
         .select("doc_id", "source")
     },
     // Mixture twin: identical fraction derivation (w·T*/count with
@@ -5765,22 +5760,17 @@ object SparkEntry {
         .select("doc_id", "lang", "epoch")
     },
     // token-budget selection: best docs by (score desc, id asc) until
-    // the running token total hits the budget — exact global-window
-    // baseline
-    // Token-budget twin — shared by samp_token_budget (global window)
-    // and samp_token_budget_scalable (boundary-block top-up): the kept
-    // set is the longest prefix of (score desc, doc_id asc) whose
-    // inclusive n_chars sum is <= budget
+    // the running token total hits the budget (score-histogram
+    // boundary-block top-up); the _scalable name is kept registered and
+    // runs the same operator against the same twin
     Gate("samp_token_budget", 0.9, tokenBudgetSql) { (s, dir) =>
       Sampling.tokenBudgetSelect(docs(s, dir)
         .select(col("doc_id"), length(col("text")).cast("long")
           .as("score"), col("n_chars")),
         TokenBudget, tokensCol = "n_chars")
     },
-    // the 100 TB form: score-histogram boundary-block top-up — same
-    // kept set (shared oracle), sorts one tie block, not the corpus
     Gate("samp_token_budget_scalable", 0.79, tokenBudgetSql) { (s, dir) =>
-      Sampling.tokenBudgetSelectScalable(docs(s, dir)
+      Sampling.tokenBudgetSelect(docs(s, dir)
         .select(col("doc_id"), length(col("text")).cast("long")
           .as("score"), col("n_chars")),
         TokenBudget, tokensCol = "n_chars")
@@ -6776,9 +6766,9 @@ object SparkEntry {
   // `documents` parquet table. Kept textually aligned with the Scala ops:
   // any semantic change must land in BOTH places.
   // Keep-latest compaction twin: the (ts desc, event_id desc) argmax
-  // per (user_id, event_type) — shared by the window-form and
-  // struct-max-form gates (which must emit identical state tables)
-  // and, WHERE-filtered, by the snapshot-diff twin's two snapshots
+  // per (user_id, event_type) — shared by rel_compact_latest and its
+  // _scalable name and, WHERE-filtered, by the snapshot-diff and
+  // merge-upsert twins' snapshots
   private def compactLatestSql(where: String = ""): String =
     s"""SELECT user_id, event_type,
        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts,
@@ -8538,9 +8528,9 @@ object SparkEntry {
        |JOIN documents y ON doc_b = y.doc_id
        |GROUP BY 1, 2""".stripMargin
 
-  // Bigram-LM twin — shared by text_lm_score (window-based c1) and
-  // text_lm_score_scalable (two-stage aggregation): c1 = Σ_w2 c2 either
-  // way, so ONE oracle pins both implementations to the same model.
+  // Bigram-LM twin — shared by text_lm_score, text_lm_score_scalable
+  // and text_lm_artifact: c1 = Σ_w2 c2, the model TextStats.lmScore
+  // builds at minCount = 0.
   private val lmScoreSql: String =
     """WITH nrm AS (
       |  SELECT doc_id, string_split(
@@ -8564,9 +8554,9 @@ object SparkEntry {
       |FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
       |GROUP BY doc_id""".stripMargin
 
-  // Domain-cap twin — shared by samp_cap (full window sort) and
-  // samp_cap_scalable (boundary-bucket-only sort): the kept set is
-  // defined identically (10 smallest (hash, key) per stratum).
+  // Domain-cap twin — shared by samp_cap and samp_cap_scalable: the
+  // 10 smallest (hash, key) per stratum, which Sampling.capPerStratum
+  // finds by ranking within hash buckets, never a whole stratum.
   private val capSql: String =
     """SELECT doc_id, source FROM (
       |  SELECT doc_id, source,
@@ -8577,11 +8567,10 @@ object SparkEntry {
       |  FROM documents WHERE doc_id IS NOT NULL)
       |WHERE rn <= 10""".stripMargin
 
-  // Token-budget twin — shared by samp_token_budget (global window)
-  // and samp_token_budget_scalable (histogram boundary-block top-up):
-  // the kept set is the longest (score desc, doc_id asc)-prefix whose
-  // inclusive token sum fits the budget. Integer window sum — no float
-  // accumulation anywhere.
+  // Token-budget twin — shared by samp_token_budget and its _scalable
+  // name: the kept set is the longest (score desc, doc_id asc)-prefix
+  // whose inclusive token sum fits the budget. Integer window sum — no
+  // float accumulation anywhere.
   private val tokenBudgetSql: String =
     s"""SELECT doc_id, score, n_chars FROM (
        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS score, n_chars,

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -71,10 +72,16 @@ object VecExpressions {
   val DotName = "graft_vec_dot"
 
   /** Register the expression in the session's function registry (the
-    * public route from Expression to Column in Spark 4). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => VecDotF(exprs(0), exprs(1)), "built-in")
+    * public route from Expression to Column in Spark 4), unless the
+    * session already has it — from an earlier call or from
+    * [[graft.GraftExtensions]]. Replacing it again would only log a
+    * "replaced a previously registered function" warning per call. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(DotName)))
+      registry.createOrReplaceTempFunction(
+        DotName, exprs => VecDotF(exprs(0), exprs(1)), "built-in")
+  }
 
   /** Column-API dot product; requires [[register]] on the session. */
   def vecDot(a: Column, b: Column): Column = call_function(DotName, a, b)

@@ -480,7 +480,8 @@ object Relational {
     * For a group whose value column is nearly continuous the histogram
     * degenerates to ~N rows; at that scale quantize first (or use the
     * approx-quantile contract) — the boundary-bucket rewrite in
-    * samp_cap_scalable shows the exact-within-one-bucket recipe.
+    * [[Sampling.capPerStratum]] shows the exact-within-one-bucket
+    * recipe.
     * NULL values are excluded (SQL aggregate convention; NULL ordering
     * differs between engines, so they must not reach the window).
     * Output: (group, n, min_v, p25_v, med_v, p75_v, max_v).
@@ -767,18 +768,12 @@ object Relational {
     val tot = perCust.agg(sum(col("spend")).as("total"))
     // r14 (VERDICT-r13 item 5): ntile over the |customers|-sized
     // global window → two-pass range-partitioned rank + ntile's
-    // bucket arithmetic (see Sampling.curriculumBins) — bit-identical
-    // deciles, no single-partition sort of the customer spine
+    // bucket arithmetic (Sampling.ntileOf) — bit-identical deciles,
+    // no single-partition sort of the customer spine
     Sampling.globalRowNumber(perCust,
         Seq(col("spend").desc, col("o_custkey").asc), "_i")
       .crossJoin(broadcast(perCust.agg(count(lit(1)).as("_n"))))
-      .withColumn("decile", expr(
-        """CASE WHEN _i <= (_n % 10) * (_n div 10 + 1)
-          | THEN (_i - 1) div (_n div 10 + 1) + 1
-          | ELSE (_n % 10)
-          |   + (_i - (_n % 10) * (_n div 10 + 1) - 1)
-          |     div (_n div 10) + 1
-          |END""".stripMargin).cast("long"))
+      .withColumn("decile", Sampling.ntileOf(col("_i"), col("_n"), 10))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_customers"),
         sum(col("spend")).as("rev"))
@@ -1486,40 +1481,20 @@ object Relational {
             .otherwise(col(c)).as(c)): _*)
   }
 
-  /** Keep-latest compaction (CDC upsert semantics), window form: one
-    * surviving row per key — the greatest (time, tie) — the step that
-    * turns an append-only change log into current state before a
-    * training read. The tie column must make the order TOTAL (here
-    * event_id, unique): row_number over a non-total order keeps an
-    * arrival-order-dependent winner. This form sorts every key's
-    * history inside the window — the baseline semantics;
-    * [[latestEventStateScalable]] produces the same rows with one
-    * hash aggregate and no sort.
+  /** Keep-latest compaction (CDC upsert semantics): one surviving row
+    * per key — the greatest (time, tie) — the step that turns an
+    * append-only change log into current state before a training read.
+    * The tie column must make the order TOTAL (here event_id, unique).
+    * `max(struct(time, tie, payload))` under a keyed groupBy — struct
+    * comparison is lexicographic, so the max IS the (time, tie)-argmax,
+    * carrying its payload atomically (no per-column max tearing rows).
+    * One hash aggregate with map-side partial combine: each partition
+    * sends one candidate row per key it saw, instead of shuffling and
+    * sorting every key's full history — state-sized, not log-sized,
+    * exchange on an append-heavy log.
     * Output: (user_id, event_type, last_ts, last_event_id, last_value).
     */
-  def latestEventState(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id", "event_type")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    events
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col("user_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("last_ts"),
-        col("event_id").as("last_event_id"),
-        col("value").as("last_value"))
-  }
-
-  /** Keep-latest compaction, scalable form: `max(struct(time, tie,
-    * payload))` under a keyed groupBy — struct comparison is
-    * lexicographic, so the max IS the (time, tie)-argmax, carrying its
-    * payload atomically (no per-column max tearing rows). One hash
-    * aggregate with map-side partial combine: each partition sends one
-    * candidate row per key it saw, vs the window form shuffling and
-    * SORTING every key's full history — the difference between
-    * state-sized and log-sized exchange on an append-heavy 100 TB log.
-    * Identical output to [[latestEventState]] (the spec pins it).
-    */
-  def latestEventStateScalable(events: DataFrame): DataFrame =
+  def latestEventState(events: DataFrame): DataFrame =
     events
       .groupBy("user_id", "event_type")
       .agg(max(struct(col("ts"), col("event_id"), col("value")))
@@ -1584,7 +1559,7 @@ object Relational {
 
   /** MERGE INTO semantics — apply a compacted change feed to a base
     * snapshot in one keyed full-outer join (the step after
-    * [[latestEventStateScalable]] turns a raw CDC log into one row per
+    * [[latestEventState]] turns a raw CDC log into one row per
     * key): a delta row with `opCol = 'D'` deletes the key, any other
     * delta row upserts its payload (update when the key exists, insert
     * when it doesn't), untouched base rows pass through.

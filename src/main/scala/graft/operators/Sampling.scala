@@ -67,34 +67,20 @@ object Sampling {
       .drop("_pid", "_rn", "_off")
   }
 
-  /** Global INCLUSIVE running sum of `valCol` over a TOTAL order —
-    * the [[globalRowNumber]] two-pass device with per-partition SUM
-    * offsets instead of counts. Exact when `valCol` is integral (the
-    * offsets are plain long sums — order-independent). Output: input
-    * columns + `cumCol`. */
-  private[graft] def globalRunningSum(df: DataFrame, sortCols: Seq[Column],
-                                      valCol: String,
-                                      cumCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
-    val parted = df.repartitionByRange(p, sortCols: _*)
-      .withColumn("_pid", spark_partition_id()).persist()
-    parted.count() // materialize now — two racing consumers otherwise
-    val offsets = parted.groupBy("_pid")
-      .agg(sum(col(valCol)).as("_s"))
-    val wOff = Window.orderBy(col("_pid").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // partitions-sized window (≤ p rows) — the bounded-window class
-    val off = offsets
-      .withColumn("_off", coalesce(sum("_s").over(wOff), lit(0L)))
-      .select(col("_pid"), col("_off"))
-    val wIn = Window.partitionBy(col("_pid")).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    parted
-      .withColumn("_cs", sum(col(valCol)).over(wIn))
-      .join(broadcast(off), "_pid")
-      .withColumn(cumCol, col("_cs") + col("_off"))
-      .drop("_pid", "_cs", "_off")
+  /** `ntile(b)`'s bucket (1-based, long) for the row at 1-based
+    * `rank` of `n` rows, from ntile's published arithmetic: the first
+    * n % b buckets hold n div b + 1 rows, the rest n div b. Exact for a
+    * total order, where the rank fixes the bucket. The ELSE arm divides
+    * by n div b — unreachable when that is 0 (every rank then takes the
+    * first arm), and CASE short-circuits under ANSI. */
+  private[graft] def ntileOf(rank: Column, n: Column, b: Int): Column = {
+    def div(x: Column, y: Column) = call_function("div", x, y)
+    val q = div(n, lit(b))
+    val r = n % lit(b)
+    val head = r * (q + 1)
+    when(rank <= head, div(rank - 1, q + 1) + 1)
+      .otherwise(r + div(rank - head - 1, q) + 1)
+      .cast("long")
   }
 
   /** Cumulative Poisson(1) thresholds (4 dp) for the bootstrap's
@@ -452,8 +438,8 @@ object Sampling {
     * `maxPerStratum` rows per stratum, drawn weighted-without-
     * replacement by the row weight ("100 docs per source, long docs
     * counting by their tokens" — the domain cap and the token
-    * weighting in one pass). Same per-stratum window shape as the
-    * uniform cap (boundary-bucket rewrite applies if a stratum
+    * weighting in one pass). A per-stratum window over the race key
+    * ([[capPerStratum]]'s hash-bucket rewrite applies if a stratum
     * outgrows a partition sort); same NULL/guard contract as the
     * global race. */
   def weightedCapPerStratum(df: DataFrame, maxPerStratum: Int,
@@ -474,27 +460,53 @@ object Sampling {
       .drop("_ekey", "_rn")
   }
 
+  /** [[capPerStratum]]'s buckets are the 32-bit hash's top 10 bits:
+    * 1024 buckets. */
+  private val CapBucketBits = 10
+
   /** Per-stratum cap — the "domain cap" of corpus mixing: keeps at most
     * `maxPerStratum` rows per stratum, chosen deterministically by hash
     * order (not arrival/partition order, so the kept set is stable
-    * across runs and engines). Uses a per-stratum window; for caps in
-    * the multi-million range, prefer [[stratifiedSample]] with a
-    * fraction (a window sorts each stratum).
+    * across runs and engines): the `maxPerStratum` smallest rows by
+    * (hash, key). No per-stratum sort: a bucket = the hash's high bits
+    * is a PREFIX of that order, so per-(stratum, bucket) counts (one
+    * map-side-combined aggregation, strata×1024 rows — broadcast-sized)
+    * give each row the count of its stratum's rows in lower buckets. Buckets at or below the boundary are then ranked
+    * within (stratum, bucket) — many small parallel sorts instead of
+    * one per stratum — and buckets past it drop before any shuffle.
+    * Exact, no sampling error: one huge stratum never funnels through
+    * a single reducer's sort. A NULL stratum is its own group; NULL
+    * keys drop.
     */
-  def capPerStratum(df: DataFrame, maxPerStratum: Int,
+  def capPerStratum(df: DataFrame, maxPerStratum: Long,
                     stratumCol: String = "source",
                     keyCol: String = "doc_id",
                     salt: String = "graft"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(stratumCol)
-      .orderBy(hashValue(col(keyCol), salt).asc, col(keyCol).asc)
     // NULL keys drop (same contract as every other op in this file):
     // a NULL hash would otherwise sort NULLS FIRST and preferentially
     // occupy cap slots, evicting real rows
-    df.filter(col(keyCol).isNotNull)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxPerStratum)
-      .drop("_rn")
+    val base = df.filter(col(keyCol).isNotNull)
+      .withColumn("_h", hashValue(col(keyCol), salt))
+      .withColumn("_b", shiftright(col("_h"), 32 - CapBucketBits))
+    // rows in strictly-lower buckets of the same stratum
+    val below = base.groupBy(col(stratumCol), col("_b"))
+      .agg(count(lit(1)).as("_c"))
+      .withColumn("_below", sum("_c").over(
+        Window.partitionBy(stratumCol).orderBy(col("_b").asc)) - col("_c"))
+    // null-safe stratum join: a NULL stratum is its own group;
+    // Seq-join equality would silently drop it
+    val inBucket = Window.partitionBy(col(stratumCol), col("_b"))
+      .orderBy(col("_h").asc, col(keyCol).asc)
+    base.as("rows").join(broadcast(below).as("cnt"),
+        col(s"rows.$stratumCol") <=> col(s"cnt.$stratumCol") &&
+          col("rows._b") === col("cnt._b"))
+      .filter(col("cnt._below") < maxPerStratum)
+      .select((df.columns.map(c => col(s"rows.$c")) ++
+        Seq(col("rows._h"), col("rows._b"), col("cnt._below"))): _*)
+      .withColumn("_rn", row_number().over(inBucket))
+      .filter(col("_below") + col("_rn") <= maxPerStratum)
+      .drop("_h", "_b", "_below", "_rn")
   }
 
   /** Cluster-stratified diversity sample — per SEMANTIC cluster, keep
@@ -508,10 +520,9 @@ object Sampling {
     * (codebook, salt, emb) and replays in any engine.
     *
     * Scale posture: one broadcast-codebook assignment (struct-max, no
-    * window over N×C) + the bounded per-cluster window; clusters are
-    * codebook-sized, and [[capPerStratumScalable]]'s boundary-bucket
-    * rewrite applies verbatim if a cluster's membership outgrows a
-    * partition sort. Output: (vec_id, cid). */
+    * window over N×C) + [[capPerStratum]]'s hash-bucketed cap, which
+    * never sorts a whole cluster on one reducer however large the
+    * cluster grows. Output: (vec_id, cid). */
   def clusterStratifiedSample(emb: DataFrame, perCluster: Int = 10,
                               nClusters: Int = 16,
                               idCol: String = "vec_id",
@@ -520,56 +531,6 @@ object Sampling {
     capPerStratum(
       Similarity.ivfAssignments(emb, nClusters, idCol, vecCol),
       perCluster, stratumCol = "cid", keyCol = "vec_id", salt = salt)
-
-  /** Scalable twin of [[capPerStratum]] — IDENTICAL output, no full
-    * per-stratum sort. The kept set is the `maxPerStratum` smallest rows
-    * by (hash, key); a bucket = the hash's high bits is a PREFIX of that
-    * sort order, so per-(stratum, bucket) counts (one map-side-combined
-    * aggregation, strata×nBuckets rows — broadcast-sized) locate the
-    * boundary bucket exactly: buckets wholly below the cap pass through
-    * unsorted, buckets above drop, and only the ONE boundary bucket per
-    * stratum (~n/nBuckets rows) is window-sorted for the remaining
-    * slots. Exact top-up, no sampling error, no safety-factor retry —
-    * at a multi-million cap this sorts ~1/nBuckets of each stratum
-    * instead of all of it.
-    */
-  def capPerStratumScalable(df: DataFrame, maxPerStratum: Long,
-                            stratumCol: String = "source",
-                            keyCol: String = "doc_id",
-                            salt: String = "graft",
-                            nBuckets: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nBuckets > 0 && (nBuckets & (nBuckets - 1)) == 0,
-      s"nBuckets must be a power of two: $nBuckets")
-    val shiftBits = 32 - java.lang.Integer.numberOfTrailingZeros(nBuckets)
-    val aux = Seq("_h", "_b", "_below", "_c", "_rn")
-    val base = df.filter(col(keyCol).isNotNull)
-      .withColumn("_h", hashValue(col(keyCol), salt))
-      .withColumn("_b", shiftright(col("_h"), shiftBits))
-    val wcum = Window.partitionBy(stratumCol).orderBy(col("_b").asc)
-    // rows in strictly-lower buckets of the same stratum
-    val cum = base.groupBy(col(stratumCol), col("_b"))
-      .agg(count(lit(1)).as("_c"))
-      .withColumn("_below", sum("_c").over(wcum) - col("_c"))
-    // null-safe stratum join: the window variant treats a NULL stratum
-    // as its own group; Seq-join equality would silently drop it
-    val keyed = base.as("rows").join(broadcast(cum).as("cnt"),
-      col(s"rows.$stratumCol") <=> col(s"cnt.$stratumCol") &&
-        col("rows._b") === col("cnt._b"))
-      .select((df.columns.map(c => col(s"rows.$c")) ++
-        Seq(col("rows._h"), col("cnt._below"), col("cnt._c"))): _*)
-    val whole = keyed.filter(col("_below") + col("_c") <= maxPerStratum)
-    // at most one boundary bucket per stratum → the window sorts only
-    // that bucket's rows
-    val wb = Window.partitionBy(stratumCol)
-      .orderBy(col("_h").asc, col(keyCol).asc)
-    val topped = keyed
-      .filter(col("_below") < maxPerStratum &&
-        col("_below") + col("_c") > maxPerStratum)
-      .withColumn("_rn", row_number().over(wb))
-      .filter(col("_rn") <= lit(maxPerStratum) - col("_below"))
-    whole.drop(aux: _*).unionByName(topped.drop(aux: _*))
-  }
 
   /** Mixture resampling — rebalance a corpus to target stratum shares
     * (e.g. language rebalancing before training): each stratum s with
@@ -945,24 +906,14 @@ object Sampling {
                      keyCol: String = "doc_id"): DataFrame = {
     require(nBins > 0, s"nBins must be positive: $nBins")
     // r14 (VERDICT-r13 item 5): exact ntile without the single-
-    // partition window — two-pass global rank, then ntile's published
-    // bucket arithmetic (first n%b buckets hold n/b+1 rows, the rest
-    // n/b) applied to (rank, n). Bit-identical to
-    // ntile(nBins).over(orderBy(score, key)): the order is total, so
-    // rank fixes the bucket exactly. The ELSE branch divides by
-    // n div b — unreachable when that is 0 (then every rank satisfies
-    // the first arm), and CASE short-circuits under ANSI.
+    // partition window — two-pass global rank, then [[ntileOf]].
+    // Bit-identical to ntile(nBins).over(orderBy(score, key)): the
+    // order is total, so rank fixes the bucket exactly.
     val ranked = globalRowNumber(df,
       Seq(col(scoreCol).asc, col(keyCol).asc), "_i")
     val tot = ranked.agg(count(lit(1)).as("_n"))
     ranked.crossJoin(broadcast(tot))
-      .withColumn("bin", expr(
-        s"""CASE WHEN _i <= (_n % $nBins) * (_n div $nBins + 1)
-           | THEN (_i - 1) div (_n div $nBins + 1) + 1
-           | ELSE (_n % $nBins)
-           |   + (_i - (_n % $nBins) * (_n div $nBins + 1) - 1)
-           |     div (_n div $nBins) + 1
-           |END""".stripMargin).cast("long"))
+      .withColumn("bin", ntileOf(col("_i"), col("_n"), nBins))
       .drop("_i", "_n")
   }
 
@@ -1050,52 +1001,30 @@ object Sampling {
       .drop("_full", "_ceil", "_thr")
   }
 
-  /** Token-budget selection, exact form: keep documents in quality
-    * order (`scoreCol` desc, `keyCol` asc — a pinned total order)
-    * while the running token total stays within `budget` — the "take
-    * the best B tokens" step of corpus curation. PREFIX semantics:
-    * the kept set is the longest prefix of the quality order whose
-    * inclusive token sum is ≤ budget (no first-fit backfilling — a
-    * doc that overflows the budget does not let a later, smaller doc
-    * jump it; that would be a knapsack, not a deterministic cut).
+  /** Token-budget selection: keep documents in quality order
+    * (`scoreCol` desc, `keyCol` asc — a pinned total order) while the
+    * running token total stays within `budget` — the "take the best B
+    * tokens" step of corpus curation. PREFIX semantics: the kept set is
+    * the longest prefix of the quality order whose inclusive token sum
+    * is ≤ budget (no first-fit backfilling — a doc that overflows the
+    * budget does not let a later, smaller doc jump it; that would be a
+    * knapsack, not a deterministic cut).
     *
-    * The global window is the classic one-reducer sort hazard —
-    * [[tokenBudgetSelectScalable]] is the 100 TB path with the SAME
-    * kept set (one shared oracle pins them together). NULL keys drop;
-    * `scoreCol`/`tokensCol` must be non-null (a NULL score has no
-    * place in a total order — filter upstream).
+    * No global row sort. Same shape as [[capPerStratum]]: a
+    * per-distinct-score token histogram (keyed map-side-combined agg;
+    * the running window touches score-cardinality rows only) locates
+    * the boundary score block — blocks wholly inside the budget pass
+    * through unsorted, blocks past it drop, and only the ONE boundary
+    * block (the docs sharing the cut-off score) is window-sorted by key
+    * for the remaining token allowance. At corpus scale this sorts one
+    * tie block instead of the corpus. NULL keys drop;
+    * `scoreCol`/`tokensCol` must be non-null (a NULL score has no place
+    * in a total order — filter upstream).
     */
   def tokenBudgetSelect(df: DataFrame, budget: Long,
                         tokensCol: String = "n_tokens",
                         scoreCol: String = "score",
                         keyCol: String = "doc_id"): DataFrame = {
-    require(budget >= 0, s"budget must be non-negative: $budget")
-    // r14 (VERDICT-r13 item 5): the single-partition global window
-    // becomes the two-pass range-partitioned running sum — the kept
-    // set is bit-identical (the order is total, so the old RANGE
-    // frame's peer groups were singletons ≡ ROWS), and no stage ever
-    // sorts the corpus on one task
-    Sampling.globalRunningSum(df.filter(col(keyCol).isNotNull),
-        Seq(col(scoreCol).desc, col(keyCol).asc), tokensCol, "_cum")
-      .filter(col("_cum") <= budget)
-      .drop("_cum")
-  }
-
-  /** Token-budget selection, scalable form — IDENTICAL kept set to
-    * [[tokenBudgetSelect]], no global row sort. Same shape as
-    * [[capPerStratumScalable]]: a per-distinct-score token histogram
-    * (keyed map-side-combined agg; the running window touches
-    * score-cardinality rows only) locates the boundary score block —
-    * blocks wholly inside the budget pass through unsorted, blocks
-    * past it drop, and only the ONE boundary block (the docs sharing
-    * the cut-off score) is window-sorted by key for the remaining
-    * token allowance. At corpus scale this sorts one tie block
-    * instead of the corpus.
-    */
-  def tokenBudgetSelectScalable(df: DataFrame, budget: Long,
-                                tokensCol: String = "n_tokens",
-                                scoreCol: String = "score",
-                                keyCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(budget >= 0, s"budget must be non-negative: $budget")
     val wcum = Window.orderBy(col("_s").desc)
@@ -1150,8 +1079,8 @@ object Sampling {
     * (md5 hash, key) rank order as every sampler here, and NULL keys
     * drop (the capPerStratum contract). At a multi-million cap swap
     * the row_number window for the boundary-bucket construction of
-    * [[capPerStratumScalable]] — identical kept set. Output: the
-    * input rows of the balanced sample.
+    * [[capPerStratum]] — identical kept set. Output: the input rows of
+    * the balanced sample.
     */
   def balanceClasses(df: DataFrame, stratumCol: String = "lang",
                      keyCol: String = "doc_id",

@@ -408,54 +408,25 @@ object TextStats {
     * flag un-language-like token sequences — the perplexity-style
     * quality signal of a training-data pipeline.
     *
+    * c1(w1) comes from a two-stage aggregation (count per (w1, w2), then
+    * sum per w1), not a window partitioned by w1: both stages
+    * partial-aggregate map-side, so a hot head-word ("the", with
+    * ~vocabulary-many distinct successors) spreads across reducers
+    * instead of concentrating one window partition. `minCount` drops
+    * bigram contexts with c1 < minCount — the standard vocabulary
+    * cutoff that keeps the broadcast-side model bounded as the corpus
+    * (and its long tail of hapax contexts) grows. Scored bigrams are
+    * then those present in the truncated model; n_bigrams counts
+    * modeled occurrences only, and docs with no modeled bigram drop
+    * (same semantics as scoring against any external truncated LM).
+    *
     * The per-doc mean sums log-probabilities through DECIMAL(20,12) so
     * the result is partition-order-independent (double sums are not).
     * Output: (doc_id, n_bigrams, lm_score).
     */
-  def lmScore(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame = {
-    val t = split(normalized(col(textCol)), " ")
-    val bigrams = docs.select(col(idCol).as("doc_id"),
-        explode(transform(sequence(lit(1), greatest(size(t) - 1, lit(1))),
-          i => struct(get(t, i - 1).as("w1"), get(t, i).as("w2"))))
-          .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .filter(col("w2").isNotNull) // single-token docs have no bigram
-    // c1(w1) = Σ_w2 c2(w1,w2): a window over the (small) distinct-bigram
-    // table, so the (large) occurrence table joins the model ONCE
-    val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .withColumn("c1", sum("c2").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("w1")))
-    bigrams
-      .join(c2, Seq("w1", "w2"))
-      .select(col("doc_id"),
-        log10(col("c2") / col("c1")).cast("decimal(20,12)").as("lp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        (sum(col("lp")).cast("double") / count(lit(1))).as("lm_score"))
-  }
-
-  /** Scale-hardened twin of [[lmScore]]: identical output at
-    * `minCount = 0` (spec-pinned and oracle-gated), with the two
-    * 100 TB-relevant changes:
-    *
-    *  - c1(w1) comes from a two-stage aggregation (count per (w1, w2),
-    *    then sum per w1) instead of a window over the distinct-bigram
-    *    model partitioned by w1 — both stages partial-aggregate
-    *    map-side, so a hot head-word ("the", with ~vocabulary-many
-    *    distinct successors) spreads across reducers instead of
-    *    concentrating one window partition;
-    *  - `minCount` drops bigram contexts with c1 < minCount — the
-    *    standard vocabulary cutoff that keeps the broadcast-side model
-    *    bounded as the corpus (and its long tail of hapax contexts)
-    *    grows. Scored bigrams are then those present in the truncated
-    *    model; n_bigrams counts modeled occurrences only, and docs with
-    *    no modeled bigram drop (same semantics as scoring against any
-    *    external truncated LM).
-    */
-  def lmScoreScalable(docs: DataFrame, minCount: Long = 0L,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame =
+  def lmScore(docs: DataFrame, minCount: Long = 0L,
+              idCol: String = "doc_id",
+              textCol: String = "text"): DataFrame =
     lmScoreTail(docBigrams(docs, idCol, textCol),
       lmModel(docs, minCount, idCol, textCol))
 
@@ -473,8 +444,8 @@ object TextStats {
   }
 
   /** The truncated bigram model (w1, w2, c2, c1): two-stage salted
-    * aggregation, minCount context cutoff — see [[lmScoreScalable]]'s
-    * scaladoc for the 100 TB reasoning. */
+    * aggregation, minCount context cutoff — see [[lmScore]]'s scaladoc
+    * for the 100 TB reasoning. */
   private def lmModel(docs: DataFrame, minCount: Long, idCol: String,
                       textCol: String): DataFrame = {
     // c2 feeds BOTH c1 and the model join — persist, or the corpus-wide
@@ -525,7 +496,7 @@ object TextStats {
 
   /** Score documents against the STORED LM artifact — the identical
     * [[lmScoreTail]] over the re-read model, so scoring the training
-    * corpus itself is bit-identical to [[lmScoreScalable]] (the gate)
+    * corpus itself is bit-identical to [[lmScore]] (the gate)
     * and scoring unseen data is the frozen-model production path. */
   def lmScoreFromArtifact(docs: DataFrame, dir: String,
                           idCol: String = "doc_id",
@@ -551,7 +522,7 @@ object TextStats {
     * (Heaps' law) and broadcast; N and B are in-plan 1-row aggregates
     * (no driver count); the final rank is TakeOrderedAndProject, never
     * a global sort. minCount bounds the surviving bigram model exactly
-    * like [[lmScoreScalable]]'s vocabulary cutoff.
+    * like [[lmScore]]'s vocabulary cutoff.
     * Output: (a, b, c_ab, pmi).
     */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 100,

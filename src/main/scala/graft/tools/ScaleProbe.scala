@@ -76,36 +76,19 @@ object ScaleProbe {
           col("doc_id") % 97 === 0).select("doc_id"))
         .count()
     }
-    // domain cap at a cap that actually bites at probe scale: the window
-    // form sorts every stratum in full; the boundary-bucket form sorts
-    // ~1/1024 of one bucket per stratum — same output (spec-pinned)
-    val cap = 2000L // strata are ~2.5k rows at K=10, ~7.5k at K=30
-    time(big)("samp_cap_window")(
-      Sampling.capPerStratum(big, cap.toInt).count())
-    time(big)("samp_cap_scalable")(
-      Sampling.capPerStratumScalable(big, cap).count())
-    // the skew story: ONE stratum holding a K×2M-row corpus — the window
-    // form funnels every row through a single reducer's sort; the
-    // boundary-bucket form aggregates in parallel and sorts ~n/1024 rows.
-    // Synthetic range frame: the documents table is too small to expose
-    // a sort that is O(n log n) on one core.
+    // domain cap at a cap that actually bites at probe scale
+    // (strata are ~2.5k rows at K=10, ~7.5k at K=30)
+    time(big)("samp_cap")(Sampling.capPerStratum(big, 2000L).count())
+    // ONE stratum holding a K×2M-row corpus: a synthetic range frame,
+    // since the documents table is too small to expose a one-stratum
+    // sort
     val oneBig = spark.range(0L, k * 2000000L, 1L, 64)
       .select(col("id").as("doc_id"), lit("all").as("src1"))
     println(s"PROBE capRows=${k * 2000000L}")
-    time(big)("samp_cap_window_1stratum")(
-      Sampling.capPerStratum(oneBig, 20000, stratumCol = "src1").count())
-    time(big)("samp_cap_scalable_1stratum")(
-      Sampling.capPerStratumScalable(oneBig, 20000L, stratumCol = "src1")
-        .count())
-    // LM scoring: the two-stage-aggregation form vs the hot-w1 window
-    // form (model table grows with the corpus; the window concentrates
-    // each head-word's successors on one reducer)
-    time(big)("lm_score_window")(TextStats.lmScore(big).count())
-    time(big)("lm_score_scalable")(TextStats.lmScoreScalable(big).count())
-    // CDC compaction: window form shuffles + SORTS the whole K×2M-row
-    // log (per-key history grows with K); the max(struct) form partial-
-    // aggregates map-side, so only ~|keys|·partitions candidate rows
-    // cross the wire — exchange is state-sized, not log-sized
+    time(big)("samp_cap_1stratum")(
+      Sampling.capPerStratum(oneBig, 20000L, stratumCol = "src1").count())
+    time(big)("lm_score")(TextStats.lmScore(big).count())
+    // CDC compaction over a K×2M-row log (1,500 (user, type) keys)
     val evLog = spark.range(0L, k * 2000000L, 1L, 64)
       .select(col("id").as("event_id"),
         timestamp_micros(lit(1704067200000000L) + col("id") * 1000L)
@@ -115,10 +98,7 @@ object ScaleProbe {
           .as("event_type"),
         (col("id") % 1000L).cast("double").as("value"))
     println(s"PROBE compactRows=${k * 2000000L}")
-    time(big)("compact_window")(
-      Relational.latestEventState(evLog).count())
-    time(big)("compact_scalable")(
-      Relational.latestEventStateScalable(evLog).count())
+    time(big)("compact")(Relational.latestEventState(evLog).count())
     // fuzzy linkage: 10× the sf0.1 key vocabulary (150k numeric keys —
     // same shape as c_name suffixes). Candidate pairs per key are
     // alphabet-bounded, so time should track the verified-pair OUTPUT
@@ -127,19 +107,14 @@ object ScaleProbe {
       .select(format_string("key#%09d", col("id")).as("name"))
     time(big)("fuzzy_vocab_150k")(
       Dedup.editDistancePairs(keys150k, "name").count())
-    // token-budget selection: the window form funnels the whole corpus
-    // through one reducer's global sort; the histogram form aggregates
-    // per distinct score and window-sorts ONE tie block. Same output
-    // (spec-pinned). 1000 distinct scores over K×2M rows.
+    // token-budget selection over K×2M rows, 1000 distinct scores,
+    // budget ~half the corpus by tokens
     val budgetRows = spark.range(0L, k * 2000000L, 1L, 64)
       .select(col("id").as("doc_id"), (col("id") % 1000L).as("score"),
         (col("id") % 97L + 1L).as("n_tokens"))
     println(s"PROBE budgetRows=${k * 2000000L}")
-    val halfTokens = k * 2000000L / 2 * 49 // ~half the corpus by tokens
-    time(big)("token_budget_window")(
-      Sampling.tokenBudgetSelect(budgetRows, halfTokens).count())
-    time(big)("token_budget_scalable")(
-      Sampling.tokenBudgetSelectScalable(budgetRows, halfTokens).count())
+    time(big)("token_budget")(Sampling.tokenBudgetSelect(budgetRows,
+      k * 2000000L / 2 * 49).count())
     // triangle counting under a celebrity node: a hub of degree H (no
     // triangles) + 20k disjoint K4s (80k triangles exactly). The
     // degree-oriented plan gives the hub out-degree 0 — zero wedges —

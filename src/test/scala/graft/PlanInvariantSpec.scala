@@ -175,14 +175,15 @@ class PlanInvariantSpec extends SparkSpec {
     Set("rel_auc", // ROC prefix sums over the score histogram
       "text_lr_pipeline", // same device over the 1e-6-grid p histogram
       "text_lr_auc", // restored r14 gate — same histogram device
-      "samp_curriculum_scalable", "samp_token_budget_scalable",
+      "samp_curriculum_scalable", // curriculum score histogram
+      // the token-budget score histogram, under both names
+      "samp_token_budget", "samp_token_budget_scalable",
       "rel_cumulative_users", "rel_rolling_stats") ++ // day spine
     // 3. two-pass global-rank gates (r14): the corpus-sized window
     // became Window.partitionBy(_pid); the ONLY residual partition-
     // less window is the per-partition OFFSET table, bounded by
     // defaultParallelism rows (Sampling.globalRowNumber scaladoc)
-    Set("samp_curriculum", "samp_token_budget",
-      "rel_revenue_deciles", "rel_gini")
+    Set("samp_curriculum", "rel_revenue_deciles", "rel_gini")
 
   /** Partition-less WindowExec occurrences, INCLUDING inside cached
     * subtrees (a persisted solve hides its window behind an

@@ -6,8 +6,8 @@ import graft.operators._
 
 /** Round-4 behavior pins: the SQL-expressible multimodal stub decoder
   * (mapPartitions path ≡ in-plan expression twin), ANN recall floors vs
-  * the exact ranking, the boundary-bucket domain cap's equivalence to
-  * the window form, and the scale-hardened LM scorer. */
+  * the exact ranking, the hash-bucketed domain cap against a
+  * plain-Scala reference, and the LM scorer's vocabulary cutoff. */
 class Round4Spec extends SparkSpec {
   import spark.implicits._
 
@@ -80,41 +80,37 @@ class Round4Spec extends SparkSpec {
     assert(a.size == 16)
   }
 
-  // ---- scalable domain cap ≡ window domain cap ----
+  // ---- hash-bucketed domain cap ≡ its definition ----
 
-  test("capPerStratumScalable == capPerStratum on sf0.1 documents") {
+  /** The cap's definition over collected rows: per source (NULL is its
+    * own group), the `cap` smallest (hash, id); NULL ids drop. Same
+    * string form as [[rows]]. */
+  private def capRef(df: org.apache.spark.sql.DataFrame,
+                     cap: Int): Seq[String] =
+    df.select(col("doc_id"), col("source"),
+        Sampling.hashValue(col("doc_id"), "graft").as("h"))
+      .collect().toSeq
+      .filterNot(_.isNullAt(0))
+      .groupBy(r => Option(r.getString(1))).values
+      .flatMap(_.sortBy(r => (r.getLong(2), r.getLong(0))).take(cap))
+      .map(r => s"${r.getLong(0)}|${r.getString(1)}").toSeq.sorted
+
+  test("capPerStratum == per-source (hash, id) reference on sf0.1 documents") {
     val docs = Tables.load(spark, "/root/testdata/sf0.1", "documents")
     for (cap <- Seq(1, 10, 377, 100000)) {
-      val w = Sampling.capPerStratum(docs, cap).select("doc_id", "source")
-      val s = Sampling.capPerStratumScalable(docs, cap)
-        .select("doc_id", "source")
-      assert(rows(w) == rows(s), s"cap=$cap")
+      val got = Sampling.capPerStratum(docs, cap).select("doc_id", "source")
+      assert(rows(got) == capRef(docs, cap), s"cap=$cap")
     }
   }
 
-  test("capPerStratumScalable: NULL stratum kept as its own group, NULL keys drop") {
+  test("capPerStratum: NULL stratum kept as its own group, NULL keys drop") {
     val df = Seq[(java.lang.Long, String)](
       (1L, null), (2L, null), (3L, null), (4L, "a"), (5L, "a"),
       (null, "a"), (null, null),
     ).toDF("doc_id", "source")
-    val w = Sampling.capPerStratum(df, 2).select("doc_id", "source")
-    val s = Sampling.capPerStratumScalable(df, 2)
-      .select("doc_id", "source")
-    assert(rows(w) == rows(s))
-    assert(s.count() == 4) // 2 of the NULL stratum + both 'a' rows
-  }
-
-  // ---- scale-hardened LM scorer ----
-
-  test("lmScoreScalable(minCount=0) == lmScore") {
-    val docs = Seq(
-      (1L, "the cat sat on the mat"),
-      (2L, "the cat ran"),
-      (3L, "a dog sat"),
-      (4L, "single"),
-    ).toDF("doc_id", "text")
-    assert(rows(TextStats.lmScoreScalable(docs)) ==
-      rows(TextStats.lmScore(docs)))
+    val got = Sampling.capPerStratum(df, 2).select("doc_id", "source")
+    assert(rows(got) == capRef(df, 2))
+    assert(got.count() == 4) // 2 of the NULL stratum + both 'a' rows
   }
 
   // ---- bloom-prefiltered decontamination ----
@@ -241,12 +237,12 @@ class Round4Spec extends SparkSpec {
     assert(streamed.count() > 0)
   }
 
-  test("lmScoreScalable minCount drops rare contexts from the model") {
+  test("lmScore minCount drops rare contexts from the model") {
     val docs = Seq(
       (1L, "the cat sat on the mat"), // "the" context count >= 2
       (2L, "zzz qqq"),                // hapax context -> dropped
     ).toDF("doc_id", "text")
-    val scored = TextStats.lmScoreScalable(docs, minCount = 2L)
+    val scored = TextStats.lmScore(docs, minCount = 2L)
     val byDoc = scored.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // doc 2's only bigram context (zzz, count 1) is below the cutoff:
     // the doc has no modeled bigram and drops entirely

@@ -402,11 +402,19 @@ class Round6Spec extends SparkSpec {
       (1L, "click", "2024-01-01 11:00:00", 3L, 7.0),
       (1L, "view", "2024-01-01 09:00:00", 21L, 2.0),
       (2L, "click", "2024-01-02 00:00:00", 30L, 9.0))
-    def got(df: DataFrame) = df.collect().map(r =>
+    val got = Relational.latestEventState(ev).collect().map(r =>
       (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
         r.getDouble(4))).toSet
-    assert(got(Relational.latestEventState(ev)) == expect)
-    assert(got(Relational.latestEventStateScalable(ev)) == expect)
+    assert(got == expect)
+    // and a plain-Scala (ts, event_id) argmax over the collected log
+    val ref = ev.select(col("user_id"), col("event_type"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"), col("event_id"),
+        col("value")).collect()
+      .groupBy(r => (r.getLong(0), r.getString(1))).values
+      .map(_.maxBy(r => (r.getString(2), r.getLong(3))))
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getDouble(4))).toSet
+    assert(got == ref)
   }
 
   // ---- rel_fuzzy_join: deletion-neighborhood edit-distance pairs ----

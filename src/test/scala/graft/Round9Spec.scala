@@ -6,7 +6,7 @@ import graft.operators.{Graph, Sampling}
 
 /** Round-6 eighth-session behavior pins: epoch-repeat upsampling
   * (full/fractional/absent arms) and token-budget selection (prefix
-  * semantics, exact == scalable).
+  * semantics, checked against a plain-Scala prefix sum).
   */
 class Round9Spec extends SparkSpec {
 
@@ -68,7 +68,7 @@ class Round9Spec extends SparkSpec {
     }
   }
 
-  // ---- samp_token_budget: tokenBudgetSelect(+Scalable) ----
+  // ---- samp_token_budget: tokenBudgetSelect ----
 
   private val budgetDocs = Seq(
     (1L, 10L, 5L), // cum 5
@@ -88,22 +88,25 @@ class Round9Spec extends SparkSpec {
     "keeps all") {
     assert(Sampling.tokenBudgetSelect(budgetDocs, 0L).count() == 0)
     assert(Sampling.tokenBudgetSelect(budgetDocs, 22L).count() == 4)
-    assert(Sampling.tokenBudgetSelectScalable(budgetDocs, 0L).count() == 0)
-    assert(Sampling.tokenBudgetSelectScalable(budgetDocs, 22L).count() == 4)
   }
 
-  test("tokenBudgetSelectScalable: identical kept set to the exact " +
-    "form on a tie-heavy corpus, cutting mid-block") {
+  test("tokenBudgetSelect: identical kept set to a prefix-sum " +
+    "reference on a tie-heavy corpus, cutting mid-block") {
     // 7 distinct scores over 210 rows; budget lands inside a tie block
     val df = spark.range(1, 211).select(
       col("id").as("doc_id"),
       (col("id") % 7).as("score"),
       (col("id") * 13 % 50 + 1).as("n_tokens"))
-    val total = df.agg(sum("n_tokens")).head().getLong(0)
+    // (score desc, id asc) order, inclusive running token sum
+    val ordered = df.collect().toSeq
+      .sortBy(r => (-r.getLong(1), r.getLong(0)))
+    val cum = ordered.scanLeft(0L)(_ + _.getLong(2)).tail
+    val total = cum.last
     for (budget <- Seq(total / 3, total / 2, total - 1)) {
-      val exact = Sampling.tokenBudgetSelect(df, budget)
-      val scalable = Sampling.tokenBudgetSelectScalable(df, budget)
-      assert(rows(exact) == rows(scalable), s"budget=$budget")
+      val expect = ordered.zip(cum).takeWhile(_._2 <= budget)
+        .map(_._1.toSeq.map(String.valueOf).mkString("|")).sorted
+      assert(rows(Sampling.tokenBudgetSelect(df, budget)) == expect,
+        s"budget=$budget")
     }
   }
 
@@ -159,12 +162,12 @@ class Round9Spec extends SparkSpec {
     edges.unpersist(); tri.unpersist()
   }
 
-  test("tokenBudgetSelectScalable: boundary block fills by key order") {
+  test("tokenBudgetSelect: boundary block fills by key order") {
     // one score block: budget 7 keeps docs 1,2,3 (2+2+2=6; doc 4 would
     // make 8) — the in-block order is the key, not arrival
     val df = Seq((4L, 1L, 2L), (1L, 1L, 2L), (3L, 1L, 2L), (2L, 1L, 2L))
       .toDF("doc_id", "score", "n_tokens")
-    val got = Sampling.tokenBudgetSelectScalable(df, 7L)
+    val got = Sampling.tokenBudgetSelect(df, 7L)
       .select("doc_id").as[Long].collect().toSet
     assert(got == Set(1L, 2L, 3L))
   }
