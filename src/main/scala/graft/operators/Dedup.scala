@@ -707,7 +707,6 @@ object Dedup {
     */
   def assignCanonical(docs: DataFrame, threshold: Double = 0.8,
                       n: Int = 3, maxIter: Int = 20,
-                      exactEdges: Boolean = false,
                       driverCcMaxEdges: Long = 1000000L): DataFrame = {
     // the normalize regex is the expensive half of this projection and
     // BOTH the fingerprint branch and the representative-text branch
@@ -725,12 +724,8 @@ object Dedup {
     // Edges among representatives: MinHash+LSH candidates by default —
     // candidates are exact-Jaccard-verified, so the only approximation is
     // the candidate miss probability, ~5e-8 for a pair AT j=0.8 and
-    // ~1e-13 at j≈0.98 (the regime clone clusters live in). The exact
-    // prefix-filtered ppjoin remains available (exactEdges=true) as the
-    // deterministic twin, but it is 3-4× the cost at equal output — the
-    // measured cost center of the whole pipeline.
-    val pairs = (if (exactEdges) ngramJaccardPairs(repDocs, threshold, n)
-                 else minHashLsh(repDocs, threshold, n))
+    // ~1e-13 at j≈0.98 (the regime clone clusters live in).
+    val pairs = minHashLsh(repDocs, threshold, n)
       .select(col("doc_a"), col("doc_b"))
     // Near-dup components are tiny even on huge corpora — when the edge
     // set is bounded, a driver-side union-find beats the distributed
@@ -777,15 +772,15 @@ object Dedup {
       pairsPersisted.select(col("doc_b").as("doc_a"),
         col("doc_a").as("doc_b")))
     val edges = rebind(edgesParent).persist()
-    // localCheckpoint (not persist): the pointer-jump step references
-    // `labels` twice, so lineage would DOUBLE per iteration — the logical
-    // plan alone OOMs after ~20 rounds; checkpointing truncates it.
-    var labels = rebind(repExact.select(col("rep")))
+    // Graph.iterate re-roots each round: the pointer-jump step
+    // references `labels` twice, so lineage would DOUBLE per iteration —
+    // the logical plan alone OOMs after ~20 rounds
+    val labels0 = rebind(repExact.select(col("rep")))
       .select(col("rep").as("id"))
-      .withColumn("label", col("id")).localCheckpoint()
-    var iter = 0
+      .withColumn("label", col("id"))
     var converged = edges.isEmpty // no near-dup edges → labels are final
-    while (iter < maxIter && !converged) {
+    val (labels, iter) = Graph.iterate(labels0,
+        if (converged) 0 else maxIter) { (labels, _) =>
       val neighborMin = edges
         .join(labels, col("doc_b") === col("id"))
         .groupBy(col("doc_a")).agg(min("label").as("nmin"))
@@ -798,18 +793,16 @@ object Dedup {
       // propagation distance per round, so convergence is O(log diameter)
       // rather than O(diameter)
       val l2 = labels.select(col("id").as("jid"), col("label").as("jlabel"))
-      val next = hopped
+      hopped
         .join(l2, col("label") === col("jid"), "left")
         .select(col("id"), col("prev"),
           least(col("label"), coalesce(col("jlabel"), col("label")))
             .as("label"))
-        .localCheckpoint()
+    } { (_, next) =>
       // changed-row count as the convergence test: overflow-free
       // (a label SUM overflows Long under ANSI at ~1e9 large ids)
       converged = next.filter(col("label") =!= col("prev")).isEmpty
-      Graph.releaseCheckpoint(labels) // superseded (round-8 ADVICE)
-      labels = next.select("id", "label")
-      iter += 1
+      converged
     }
     if (!converged && iter == maxIter)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(

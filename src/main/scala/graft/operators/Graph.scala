@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Graph analytics over relationship tables — the iterative-computation
   * family (rank propagation) done Spark-first: each iteration is one
-  * keyed join + one keyed aggregate, materialized with `persist` so the
-  * lineage (and therefore the replan cost) stays flat in the iteration
-  * count instead of compounding.
+  * keyed join + one keyed aggregate, and every state-threading loop
+  * runs through [[Graph.iterate]], which re-roots each round's state
+  * with an eager local checkpoint so the lineage (and therefore the
+  * replan cost) stays flat in the iteration count instead of
+  * compounding.
   *
   * Numeric determinism: ranks are BIGINT micro-units of total mass
   * (integer fixed-point), so every operation — `div` for the per-edge
@@ -23,21 +25,6 @@ object Graph {
     * inside BIGINT through the 85× damping multiply). */
   val TotalMass: Long = 1000000000000L
 
-  /** PageRank with damping 0.85 over the undirected customer–supplier
-    * purchase graph: an edge links a customer to every supplier that
-    * ever filled one of their orders (both directions, so the bipartite
-    * walk circulates and no node dangles — every node in the graph has
-    * at least the edge that put it there).
-    *
-    * Node ids are namespaced into one key space (customer → 2k,
-    * supplier → 2k+1); `iters` is fixed and small, so the oracle twin
-    * unrolls it as CTE pairs. Scale posture: edges/degrees/ranks are
-    * all keyed DataFrames — the joins shuffle on node id, the per-node
-    * state is one long, and each iteration's output is persisted and
-    * bounded by the node count (the workhorse join is edge-sized, the
-    * classic Pregel-on-relational shape).
-    * Output: (node_type, key, rank) — rank in units of 1e-12 mass.
-    */
   /** Undirected customer–supplier purchase edges in one namespaced key
     * space (customer → 2k, supplier → 2k+1), both directions emitted —
     * the shared graph for pageRank and connectedComponents. */
@@ -106,21 +93,56 @@ object Graph {
   }
 
   /** Release the cached blocks behind a SUPERSEDED
-    * `localCheckpoint(eager)` frame (round-8 ADVICE — the persist-side
-    * twin of pageRank's round-7 unpersist fix): an eager local
-    * checkpoint truncates lineage to cached RDD blocks, and
-    * `Dataset.unpersist()` does not reach them (they are not in the
-    * CacheManager), so a convergence loop otherwise keeps every
-    * round's frame resident until session cleanup. Call ONLY after the
-    * successor frame has materialized and every aggregate reading the
-    * old frame has run — a released checkpoint is unrecoverable (its
-    * lineage is gone by construction). */
+    * `localCheckpoint(eager)` frame: an eager local checkpoint
+    * truncates lineage to cached RDD blocks, and `Dataset.unpersist()`
+    * does not reach them (they are not in the CacheManager), so a loop
+    * otherwise keeps every round's frame resident until session
+    * cleanup. Callers: [[iterate]] and [[hits]], which own the release
+    * order. */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The one round driver of the iterative family: checkpoint `init`,
+    * then run `step(state, round)` for rounds 1..`maxRounds`, each
+    * output re-rooted with an eager `localCheckpoint`, until
+    * `stop(prev, next)` holds. Returns the last state and the number of
+    * rounds run.
+    *
+    * Every round re-roots because a round's state is read more than
+    * once (the next round's join and its merge, a broadcast side, a
+    * convergence aggregate): with lazy persists each reader re-derives
+    * the whole chain — a broadcast-exchange thread from base tables —
+    * and the logical plan doubles per round (measured r13: 23 s wall /
+    * 157 s summed job time on rel_label_prop; the first k-core cut
+    * reached 112k scan nodes by round 3). The checkpoint truncates the
+    * lineage to a flat in-memory scan; on a cluster with lossy
+    * executors use a reliable checkpoint dir instead.
+    *
+    * The release order is the one condition every loop shares: a
+    * released checkpoint cannot be recovered (its lineage is gone by
+    * construction), so the superseded state is released only after its
+    * successor has materialized and `stop`, the last reader of the old
+    * state, has run. */
+  private[graft] def iterate(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      stop: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+  : (DataFrame, Int) = {
+    var state = init.localCheckpoint(true)
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      rounds += 1
+      val next = step(state, rounds).localCheckpoint(true)
+      done = stop(state, next)
+      releaseCheckpoint(state)
+      state = next
+    }
+    (state, rounds)
+  }
 
   /** Force a persisted frame to materialize NOW (one cheap count).
     * A lazily-persisted frame that several plan branches reference —
@@ -134,29 +156,35 @@ object Graph {
     * generalized to the whole iterative family. */
   private[graft] def warm(df: DataFrame): DataFrame = { df.count(); df }
 
+  /** (node_type, key, values…) from a namespaced `node` column
+    * (customer → 2k, supplier → 2k+1). */
   private def decodeNode(df: DataFrame, valueCols: Column*): DataFrame =
     df.select(
       (when(col("node") % 2 === 0, lit("customer"))
         .otherwise(lit("supplier")).as("node_type") +:
         expr("node div 2").as("key") +: valueCols): _*)
 
+  /** PageRank with damping 0.85 over the undirected customer–supplier
+    * purchase graph: an edge links a customer to every supplier that
+    * ever filled one of their orders (both directions, so the bipartite
+    * walk circulates and no node dangles — every node in the graph has
+    * at least the edge that put it there).
+    *
+    * Node ids are namespaced into one key space (customer → 2k,
+    * supplier → 2k+1); `iters` is fixed and small, so the oracle twin
+    * unrolls it as CTE pairs. Scale posture: edges/degrees/ranks are
+    * all keyed DataFrames — the joins shuffle on node id, the per-node
+    * state is one long, and each round's output is checkpointed by
+    * [[iterate]] and bounded by the node count (the workhorse join is
+    * edge-sized, the classic Pregel-on-relational shape).
+    * Output: (node_type, key, rank) — rank in units of 1e-12 mass.
+    */
   def pageRank(orders: DataFrame, lineitem: DataFrame,
                iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
     val st = prSetup(orders, lineitem)
-    // eager per-round checkpoints (the hits/pageRankConverged pattern,
-    // r13): the former lazy persist chain materialized only at the
-    // final action, so any broadcast-exchange subtree referencing a
-    // mid-chain frame (inMass's left-join side, nAgg) recomputed the
-    // whole chain from base tables on its own thread — O(rounds²)
-    // redundant work the single-action argument cannot see
-    var ranks = st.init.localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val next = st.step(ranks).localCheckpoint(true)
-      releaseCheckpoint(ranks) // superseded once `next` materialized
-      ranks = next
-    }
+    val (ranks, _) = iterate(st.init, iters)((r, _) => st.step(r))()
     decodeNode(ranks, col("rank"))
   }
 
@@ -233,9 +261,9 @@ object Graph {
     * returns to a source set instead of spreading uniformly, so ranks
     * measure proximity to the sources rather than global centrality.
     * Sources here are the purchase-graph hubs (degree ≥ 3 × mean,
-    * derived IN-PLAN exactly like [[purchaseHubDistance]] — a fixed
-    * threshold either selects nothing or everything as degree scales
-    * with SF; the "3×" keeps |S| a stable fraction of nodes).
+    * derived IN-PLAN like [[hubSources]] — a fixed threshold either
+    * selects nothing or everything as degree scales with SF; the "3×"
+    * keeps |S| a stable fraction of nodes).
     *
     * Same integer fixed-point discipline: mass M div |S| seeds each
     * source, each round is one edge-keyed join + node-keyed sum with
@@ -258,7 +286,7 @@ object Graph {
       .persist()) // per-round consumer + nsAgg broadcast: warm it once
     val nsAgg = degS.agg(sum("is_src").as("ns"))
     val tele = Graph.TotalMass * 15 / 100
-    def step(ranks: DataFrame): DataFrame = {
+    def step(ranks: DataFrame, round: Int): DataFrame = {
       val inMass = ranks
         .join(st.edges, col("node") === col("src"))
         .select(col("dst"), expr("rank div deg").as("contrib"))
@@ -271,54 +299,12 @@ object Graph {
           (expr(s"is_src * coalesce(${tele}L div nullif(ns, 0), 0)")
             + expr("(85 * coalesce(m, 0)) div 100")).as("rank"))
     }
-    // eager per-round checkpoints — see [[pageRank]] (r13)
-    var ranks = degS.crossJoin(broadcast(nsAgg))
+    val init = degS.crossJoin(broadcast(nsAgg))
       .select(col("node"), col("deg"), col("is_src"),
         expr(s"is_src * coalesce(${Graph.TotalMass}L div nullif(ns, 0), 0)")
           .as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val next = step(ranks).localCheckpoint(true)
-      releaseCheckpoint(ranks) // superseded once `next` materialized
-      ranks = next
-    }
+    val (ranks, _) = iterate(init, iters)(step)()
     decodeNode(ranks, col("rank"))
-  }
-
-  /** Run-to-convergence PageRank — the production form of [[pageRank]]
-    * (whose FIXED round count is the oracle-expressible gate semantic).
-    * Iterates the identical [[PrState.step]] until the largest per-node
-    * rank movement is ≤ `tol` micro-mass units (max|Δ| is the classic
-    * L∞ PageRank stopping rule; with damping 0.85 it contracts ~0.85×
-    * per round, so rounds-to-tol is logarithmic in 1/tol and
-    * independent of graph size). The driver-side check per round is ONE
-    * 8-byte aggregate — the bounded-model-artifact discipline, not a
-    * row collect — and each round's state is re-rooted with
-    * `localCheckpoint(eager)` because the convergence join references
-    * it alongside the next round (the [[peelNodes]] lineage lesson).
-    * Integer fixed-point ranks cannot oscillate below tol ≥ 1 in
-    * practice, but `maxIters` bounds the loop regardless.
-    * Returns (decoded ranks, rounds executed).
-    */
-  def pageRankFixpoint(orders: DataFrame, lineitem: DataFrame,
-                       tol: Long = 1000000L, maxIters: Int = 60)
-  : (DataFrame, Int) = {
-    require(tol >= 1 && maxIters >= 1, s"tol/maxIters: $tol/$maxIters")
-    val st = prSetup(orders, lineitem)
-    var ranks = st.init.localCheckpoint(true)
-    var rounds = 0
-    var delta = Long.MaxValue
-    while (delta > tol && rounds < maxIters) {
-      val next = st.step(ranks).localCheckpoint(true)
-      delta = next
-        .join(ranks.select(col("node"), col("rank").as("prev")), "node")
-        .agg(max(abs(col("rank") - col("prev"))).as("d"))
-        .head().getLong(0)
-      releaseCheckpoint(ranks) // superseded; the delta agg has run
-      ranks = next
-      rounds += 1
-    }
-    (decodeNode(ranks, col("rank")), rounds)
   }
 
   /** Run-to-convergence PageRank with an ORACLE-EXPRESSIBLE stopping
@@ -337,13 +323,11 @@ object Graph {
     * one-off probe), so rounds-to-tol is a property of the divisor
     * alone — div 3 ⇒ 8 rounds at every test SF — while an absolute
     * micro-mass tol scales with per-node mass (1/n) and would need
-    * per-SF retuning plus a 30+-round unroll at [[pageRankFixpoint]]'s
-    * production default. The driver-side check per round is ONE 8-byte
-    * aggregate over a frame that CARRIES prev_rank (the delta fuses
-    * into the step's own job — no extra per-round join pass), and each
-    * round re-roots with `localCheckpoint(eager)` (the [[peelNodes]]
-    * lineage lesson). Output: (node_type, key, rank, rounds) — rounds
-    * = rounds executed, constant per run.
+    * per-SF retuning plus a 30+-round unroll. The driver-side check per
+    * round is ONE 8-byte aggregate over a frame that CARRIES prev_rank
+    * (the delta fuses into the step's own job — no extra per-round
+    * join pass). Output: (node_type, key, rank, rounds) — rounds =
+    * rounds executed, constant per run.
     */
   def pageRankConverged(orders: DataFrame, lineitem: DataFrame,
                         residualDiv: Long = 3,
@@ -351,27 +335,34 @@ object Graph {
     require(residualDiv >= 2 && maxRounds >= 1 && maxRounds <= 20,
       s"residualDiv/maxRounds: $residualDiv/$maxRounds")
     val st = prSetup(orders, lineitem)
-    var ranks = st.init.localCheckpoint(true)
-    var rounds = 0
     var tol = -1L
-    var done = false
-    while (!done && rounds < maxRounds) {
+    val (ranks, rounds) = iterate(st.init, maxRounds) { (ranks, _) =>
       // fuse prev_rank into the step output so the convergence check
       // is an aggregate over the round's own frame, not a second join
-      val next = st.step(ranks)
+      st.step(ranks)
         .join(ranks.select(col("node"), col("rank").as("prev")), "node")
         .select(col("node"), col("deg"), col("rank"), col("prev"))
-        .localCheckpoint(true)
+    } { (_, next) =>
       val d = next.agg(max(abs(col("rank") - col("prev"))).as("d"))
         .head().getLong(0)
-      rounds += 1
       if (tol < 0) tol = d / residualDiv
-      releaseCheckpoint(ranks) // superseded once `next` materialized
-      ranks = next.drop("prev")
-      if (d <= tol) done = true
+      d <= tol
     }
-    decodeNode(ranks, col("rank"),
-      lit(rounds.toLong).as("rounds"))
+    decodeNode(ranks, col("rank"), lit(rounds.toLong).as("rounds"))
+  }
+
+  /** One synchronous min-label round: every node takes the minimum of
+    * its own and its neighbors' labels, carrying the old label as
+    * `prev` for the change count of [[minLabelFixpoint]]. */
+  private def minLabelRound(edges: DataFrame)(labels: DataFrame,
+                                              round: Int): DataFrame = {
+    val nbr = labels
+      .join(edges, col("node") === col("src"))
+      .groupBy(col("dst")).agg(min("lbl").as("nl"))
+    labels
+      .join(nbr, col("node") === col("dst"), "left")
+      .select(col("node"), col("lbl").as("prev"),
+        least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
   }
 
   /** Generic k-step min-label propagation: each iteration is one
@@ -386,9 +377,8 @@ object Graph {
     * whether the graph has converged, which is what makes a fixed-k
     * gate oracle-expressible (the twin unrolls the k steps as CTE
     * pairs). Convergence needs k ≥ the component diameter; callers at
-    * scale either pick k from a known diameter bound or iterate with a
-    * driver-side fixpoint check on a monotone label aggregate.
-    * Per-iteration `persist` keeps the lineage flat in k.
+    * scale either pick k from a known diameter bound or iterate to the
+    * fixpoint with [[minLabelFixpoint]].
     *
     * `labels0` is (node, lbl); `edges` is (src, dst), already
     * symmetrized if the relation is undirected. Isolated nodes (in
@@ -399,24 +389,8 @@ object Graph {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
     val edges = warm(edges0.persist()) // per-round join + seed source
-    // eager per-round checkpoints — see [[pageRank]] (r13): each round
-    // references `labels` TWICE (nbr build + the left-join base), and
-    // the left-join's small side can plan as a broadcast whose thread
-    // would recompute the whole lazy chain from base tables per round
-    var labels = labels0.localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val nbr = labels
-        .join(edges, col("node") === col("src"))
-        .groupBy(col("dst")).agg(min("lbl").as("nl"))
-      val next = labels
-        .join(nbr, col("node") === col("dst"), "left")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
-      releaseCheckpoint(labels) // superseded once `next` materialized
-      labels = next
-    }
-    labels
+    val (labels, _) = iterate(labels0, iters)(minLabelRound(edges))()
+    labels.select("node", "lbl")
   }
 
   /** Run-to-convergence min-label propagation — the production form of
@@ -425,35 +399,19 @@ object Graph {
     * real graphs). Each round counts the rows whose label changed — a
     * monotone quantity to drive the fixpoint: labels only DECREASE
     * under min-propagation, so changed == 0 is a true fixpoint, not a
-    * cycle. The per-round driver check is one 8-byte count; per-round
-    * `localCheckpoint(eager)` re-roots the state because the change
-    * count references it alongside the next round's join (the
-    * [[peelNodes]] lineage lesson — plain persist doubles the plan per
-    * round). Returns (labels, rounds); rounds == converged-diameter+1
-    * (the last round verifies no change).
+    * cycle. The per-round driver check is one LIMIT-1 probe. Returns
+    * (labels, rounds); rounds == converged-diameter+1 (the last round
+    * verifies no change).
     */
   def minLabelFixpoint(labels0: DataFrame, edges0: DataFrame,
                        maxIters: Int = 60): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters: $maxIters")
     val edges = edges0.persist()
-    var labels = labels0.localCheckpoint(true)
-    var rounds = 0
-    var changed = Long.MaxValue
-    while (changed > 0 && rounds < maxIters) {
-      val nbr = labels
-        .join(edges, col("node") === col("src"))
-        .groupBy(col("dst")).agg(min("lbl").as("nl"))
-      val next = labels
-        .join(nbr, col("node") === col("dst"), "left")
-        .select(col("node"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      releaseCheckpoint(labels) // superseded once `next` materialized
-      labels = next.select("node", "lbl")
-      rounds += 1
+    val (labels, rounds) = iterate(labels0, maxIters)(
+      minLabelRound(edges)) { (_, next) =>
+      next.filter(col("lbl") =!= col("prev")).isEmpty
     }
-    (labels, rounds)
+    (labels.select("node", "lbl"), rounds)
   }
 
   /** Per-node triangle counts by DEGREE-ORIENTED wedge closure — the
@@ -538,10 +496,7 @@ object Graph {
     val edges = purchaseEdges(orders, lineitem)
     val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    minLabelPropagate(labels0, edges, iters).select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"),
+    decodeNode(minLabelPropagate(labels0, edges, iters),
       col("lbl").as("component"))
   }
 
@@ -566,11 +521,7 @@ object Graph {
     val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     val (lbl, rounds) = minLabelFixpoint(labels0, edges, maxRounds)
-    lbl.select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"),
-      col("lbl").as("component"),
+    decodeNode(lbl, col("lbl").as("component"),
       lit(rounds.toLong).as("rounds"))
   }
 
@@ -590,8 +541,7 @@ object Graph {
     * argmax per node via `max(struct(cnt, -label))` (no per-node
     * window over the corpus-wide count table). Labels only need
     * non-negative BIGINTs (node ids here) for the negation trick;
-    * per-round persist keeps lineage flat, superseded frames release
-    * at hand-off. Synchronous LPA on a bipartite graph can oscillate
+    * [[iterate]] keeps the lineage flat. Synchronous LPA on a bipartite graph can oscillate
     * rather than converge — irrelevant to a fixed-k gate, which both
     * engines replay deterministically either way.
     */
@@ -622,12 +572,7 @@ object Graph {
     // aggregation itself, whose ~|E| distinct keys defeat map-side
     // partial aggregation in round 1 by construction (every neighbor
     // label distinct), an inherent property of mode-label counting.
-    // eager per-round checkpoints — see [[pageRank]] (r13): `labels` is
-    // referenced twice per round and `best` plans as a broadcast side,
-    // whose exchange thread recomputed the whole lazy chain per round
-    // (measured: 23 s wall / 157 s summed job time on rel_label_prop)
-    var labels = labels0.localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val (labels, _) = iterate(labels0, iters) { (labels, _) =>
       val cnt = labels
         .join(edges, col("node") === col("src"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -635,13 +580,10 @@ object Graph {
         .agg(max(struct(col("c").as("c"), (-col("lbl")).as("nl")))
           .as("m"))
         .select(col("dst"), (-col("m.nl")).as("nl"))
-      val next = labels
+      labels
         .join(best, col("node") === col("dst"), "left")
         .select(col("node"), coalesce(col("nl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      releaseCheckpoint(labels) // superseded once `next` materialized
-      labels = next
-    }
+    }()
     labels
   }
 
@@ -655,10 +597,7 @@ object Graph {
     val edges = purchaseEdges(orders, lineitem)
     val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    labelPropagate(labels0, edges, iters).select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"),
+    decodeNode(labelPropagate(labels0, edges, iters),
       col("lbl").as("community"))
   }
 
@@ -728,12 +667,10 @@ object Graph {
     * [[pageRank]] and [[minLabelPropagate]], the FIXED round count is
     * the oracle-expressible semantic: the result after r rounds is
     * deterministic whether or not peeling has converged (convergence
-    * needs r ≥ the longest peel chain; callers at scale iterate with a
-    * driver fixpoint check on the monotone edge count). Each round is
-    * one degree aggregation + two semi-joins — edge-sized keyed
-    * shuffles, nothing quadratic; per-round persist keeps the lineage
-    * flat in r. Output: surviving (node, degree) over the final edge
-    * set.
+    * needs r ≥ the longest peel chain; [[kCoreFixpoint]] iterates to
+    * it). Each round is one degree aggregation + two semi-joins —
+    * edge-sized keyed shuffles, nothing quadratic. Output: surviving
+    * (node, degree) over the final edge set.
     */
   def kCorePeel(pairs: DataFrame, k: Int = 2, iters: Int = 3)
   : DataFrame = {
@@ -741,49 +678,23 @@ object Graph {
       s"k >= 1 and iters in [1, 10] (twin unrolls them): $k/$iters")
     val e0 = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
       .persist()
-    val keep = peelNodes(e0, lit(k), iters)
+    val (keep, _) = peelNodes(e0, lit(k), iters)()
     coreDegrees(e0, keep)
   }
 
   /** Run-to-convergence k-core — the production form of [[kCorePeel]]
     * (fixed rounds are the gate semantic; convergence needs rounds ≥
     * the longest peel CASCADE, which is data-dependent — a path graph
-    * peels one node per round). The fixpoint check rides the keep-set
-    * COUNT: peeling only removes nodes (K_i ⊆ K_{i-1}), so equal count
-    * ⟺ equal set ⟺ true fixpoint — one 8-byte driver aggregate per
-    * round, no row data. Round state is already re-rooted per round by
-    * [[peelNodes]]'s discipline (`localCheckpoint(eager)`), so the loop
-    * here just replays the same body with the monotone check. Returns
-    * (surviving (node, degree), rounds executed — the last round
-    * verifies no shrink).
+    * peels one node per round). See [[peelToFixpoint]] for the stop.
+    * Returns (surviving (node, degree), rounds executed — the last
+    * round verifies no shrink).
     */
   def kCoreFixpoint(pairs: DataFrame, k: Int, maxIters: Int = 100)
   : (DataFrame, Int) = {
     require(k >= 1 && maxIters >= 1, s"k/maxIters: $k/$maxIters")
     val e0 = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
       .persist()
-    var keep = e0.select(explode(array(col("a"), col("b"))).as("n"))
-      .distinct()
-      .localCheckpoint(true)
-    var prev = keep.count()
-    var rounds = 0
-    var shrunk = true
-    while (shrunk && rounds < maxIters) {
-      val live = e0
-        .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-      val nextKeep = live
-        .select(explode(array(col("a"), col("b"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= lit(k)).select("n")
-        .localCheckpoint(true)
-      releaseCheckpoint(keep) // superseded once nextKeep materialized
-      keep = nextKeep
-      val c = keep.count()
-      shrunk = c < prev
-      prev = c
-      rounds += 1
-    }
+    val (keep, rounds) = peelToFixpoint(e0, lit(k), maxIters)
     (coreDegrees(e0, keep), rounds)
   }
 
@@ -791,17 +702,10 @@ object Graph {
     * set. k-core peeling is exactly K_i = {n : deg(n) ≥ k within
     * e0 ∩ K_{i-1}×K_{i-1}}, so the edge set never needs to be a
     * chained intermediate — each round reads the SAME persisted e0
-    * plus the (node-bounded, broadcast) previous keep set. Two
-    * disciplines this encodes, both measured on the sf0.1 purchase
-    * graph (15-17 s → ~5 s):
-    *  - iterating the EDGE frame referenced the previous round's full
-    *    plan ~6× per round → an exponentially-growing logical plan
-    *    (112k scan nodes by round 3) whose Catalyst traversal
-    *    dominated runtime;
-    *  - `localCheckpoint(eager)` truncates the keep set's lineage to
-    *    a flat scan each round (the GraphX-style iteration pattern) —
-    *    on a cluster with lossy executors use a reliable checkpoint
-    *    dir instead; the set is node-bounded either way.
+    * plus the (node-bounded) previous keep set. Iterating the EDGE
+    * frame referenced the previous round's full plan ~6× per round →
+    * an exponentially-growing logical plan (112k scan nodes by round
+    * 3, measured on the sf0.1 purchase graph: 15-17 s → ~5 s).
     *
     * The keep-set semi-joins carry NO broadcast hint: round 0's keep
     * set is ALL distinct nodes — O(|V|), data-sized — so a forced
@@ -809,25 +713,33 @@ object Graph {
     * large graph. The checkpoint materializes real size stats each
     * round, so the planner (plus AQE at runtime) picks broadcast
     * exactly when the shrinking set actually fits, and a shuffled
-    * semi-join when it does not. */
-  private def peelNodes(e0: DataFrame, k: Column,
-                        iters: Int): DataFrame = {
-    var keep = e0.select(explode(array(col("a"), col("b"))).as("n"))
-      .distinct()
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val live = e0
-        .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
+    * semi-join when it does not. Returns (keep set, rounds run). */
+  private def peelNodes(e0: DataFrame, k: Column, maxRounds: Int)(
+      stop: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+  : (DataFrame, Int) =
+    iterate(e0.select(explode(array(col("a"), col("b"))).as("n"))
+      .distinct(), maxRounds) { (keep, _) =>
+      e0.join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-      val nextKeep = live
         .select(explode(array(col("a"), col("b"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("n")
-        .localCheckpoint(true)
-      releaseCheckpoint(keep) // superseded once nextKeep materialized
-      keep = nextKeep
+    }(stop)
+
+  /** [[peelNodes]] until the keep set stops shrinking. The check rides
+    * the keep-set COUNT: peeling only removes nodes (K_i ⊆ K_{i-1}),
+    * so equal count ⟺ equal set ⟺ true fixpoint — one 8-byte driver
+    * aggregate per round, no row data. */
+  private def peelToFixpoint(e0: DataFrame, k: Column,
+                             maxRounds: Int): (DataFrame, Int) = {
+    var last = -1L
+    peelNodes(e0, k, maxRounds) { (prev, next) =>
+      if (last < 0) last = prev.count()
+      val c = next.count()
+      val same = c == last
+      last = c
+      same
     }
-    keep
   }
 
   /** Degrees over e0 restricted to the kept node set (the final peel
@@ -841,73 +753,60 @@ object Graph {
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
 
+  /** The purchase graph as canonical (a, b) pairs (customer 2k,
+    * supplier 2k+1; persisted) and its mean degree |E| div |N| — exact
+    * integers, ONE 8-byte driver artifact (the IVF-codebook pattern,
+    * not a row-data collect); the twin replays the same division. */
+  private def purchasePairs(orders: DataFrame,
+                            lineitem: DataFrame): (DataFrame, Long) = {
+    val e0 = orders
+      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("a"),
+        (col("l_suppkey") * 2 + 1).as("b"))
+      .distinct().persist()
+    val k = e0.agg(count(lit(1)).as("ne"))
+      .crossJoin(
+        e0.select(col("a").as("n")).unionAll(e0.select(col("b").as("n")))
+          .agg(countDistinct(col("n")).as("nn")))
+      .select(expr("ne div nn").as("k"))
+      .head().getLong(0)
+    (e0, k)
+  }
+
   /** [[kCorePeel]] over the purchase graph with the threshold derived
-    * IN-PLAN as the mean degree, k = |E| div |N| (exact integers, a
-    * 1-row broadcast — no driver round-trip, no float): "peel to the
+    * as the mean degree ([[purchasePairs]]): "peel to the
     * denser-than-average core". A fixed absolute k cannot travel
     * across data scales — mean degree grows with SF, so any constant
     * either peels nothing or everything; the derived threshold keeps
     * the gate meaningful at every SF (measured: survivors 148 / 1027 /
-    * ~12k at sf0.001/0.01/0.1, stable from round 1). Same canonical
-    * (2·cust, 2·supp+1) node encoding and decode as [[pageRank]].
+    * ~12k at sf0.001/0.01/0.1, stable from round 1).
     * Output: (node_type, key, degree) over the final edge set.
     */
   def purchaseKCore(orders: DataFrame, lineitem: DataFrame,
                     iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
-    val e0 = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("a"),
-        (col("l_suppkey") * 2 + 1).as("b"))
-      .distinct().persist()
-    // the derived threshold is ONE exact integer — a bounded model
-    // artifact on the driver (the IVF-codebook pattern, 8 bytes), NOT
-    // a row-data collect; the twin replays the same |E| div |N|
-    val kVal = e0.agg(count(lit(1)).as("ne"))
-      .crossJoin(
-        e0.select(col("a").as("n")).unionAll(e0.select(col("b").as("n")))
-          .agg(countDistinct(col("n")).as("nn")))
-      .select(expr("ne div nn").as("k"))
-      .head().getLong(0)
-    val keep = peelNodes(e0, lit(kVal), iters)
-    coreDegrees(e0, keep)
-      .select(
-        when(col("node") % 2 === 0, lit("customer"))
-          .otherwise(lit("supplier")).as("node_type"),
-        expr("node div 2").as("key"), col("degree"))
+    val (e0, k) = purchasePairs(orders, lineitem)
+    val (keep, _) = peelNodes(e0, lit(k), iters)()
+    decodeNode(coreDegrees(e0, keep), col("degree"))
   }
 
   /** Run-to-convergence k-core over the purchase graph, gated: peel
-    * with the in-plan mean-degree threshold until the keep set stops
-    * shrinking ([[kCoreFixpoint]]'s monotone-count rule — equal count
-    * ⟺ equal set), rounds_executed in the output. Measured fixpoint: 2
-    * rounds (1 peel + 1 verify) at every test SF (one-off probe) —
-    * the mean-degree core is shallow on this graph; cap 6 covers any
-    * cascade the testdata could produce, and past the cap both
-    * engines agree on the capped state.
+    * with the mean-degree threshold until the keep set stops shrinking
+    * ([[peelToFixpoint]]), rounds_executed in the output. Measured
+    * fixpoint: 2 rounds (1 peel + 1 verify) at every test SF (one-off
+    * probe) — the mean-degree core is shallow on this graph; cap 6
+    * covers any cascade the testdata could produce, and past the cap
+    * both engines agree on the capped state.
     * Output: (node_type, key, degree, rounds).
     */
   def purchaseKCoreConverged(orders: DataFrame, lineitem: DataFrame,
                              maxRounds: Int = 6): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 10,
       s"maxRounds (twin unrolls them): $maxRounds")
-    val e0 = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("key_a"),
-        (col("l_suppkey") * 2 + 1).as("key_b"))
-      .distinct().persist()
-    val kVal = e0.agg(count(lit(1)).as("ne"))
-      .crossJoin(e0.select(col("key_a").as("n"))
-        .unionAll(e0.select(col("key_b").as("n")))
-        .agg(countDistinct(col("n")).as("nn")))
-      .select(expr("ne div nn").as("k"))
-      .head().getLong(0)
-    val (core, rounds) = kCoreFixpoint(e0, kVal.toInt, maxRounds)
-    core.select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"), col("degree"),
+    val (e0, k) = purchasePairs(orders, lineitem)
+    val (keep, rounds) = peelToFixpoint(e0, lit(k), maxRounds)
+    decodeNode(coreDegrees(e0, keep), col("degree"),
       lit(rounds.toLong).as("rounds"))
   }
 
@@ -918,16 +817,15 @@ object Graph {
     * the rounds as CTE pairs (the [[minLabelPropagate]] argument, with
     * `+1 per hop` instead of min-label).
     *
-    * Each round is one keyed join + one keyed min-aggregate + one
-    * full-outer merge; the running dist set is referenced TWICE per
-    * round (neighbor expansion and merge), so it is re-rooted with
-    * `localCheckpoint(eager)` every round — plain persist would double
-    * the logical plan per round and Catalyst traversal would dominate
-    * by round 3 (measured on purchaseKCore's first cut; see
-    * [[peelNodes]]). At scale the classic refinement is to expand only
-    * the FRONTIER (nodes whose dist changed last round) — with
-    * synchronous rounds that is exactly dist == k-1 — but the full-set
-    * join is already edge-bounded per round.
+    * Frontier-only: with synchronous unweighted rounds a node's
+    * distance never improves after first assignment, so round k only
+    * expands the nodes REACHED IN round k-1 — exactly `dist == k-1` in
+    * the running set, which is therefore the whole loop state. Per
+    * round: frontier⋈edges (edge work proportional to the frontier's
+    * adjacency, not |reached|), a distinct, and one anti-join against
+    * the reached set. On a saturating graph the frontier empties and
+    * later rounds cost ~nothing (BASELINE.md's BFS table measured this
+    * form against the full-set re-join it replaced).
     * `sources` is (node); `edges0` is (src, dst), symmetrized.
     * Output: (node, dist), only nodes within `iters` hops.
     */
@@ -936,65 +834,14 @@ object Graph {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
     val edges = edges0.persist()
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val nbr = dist.join(edges, col("node") === col("src"))
-        .groupBy(col("dst")).agg((min(col("dist")) + 1).as("nd"))
-      // least() would skip a NULL side here (Spark semantics), but the
-      // double-coalesce form is explicit AND engine-portable — the
-      // DuckDB twin uses the identical expression
-      val next = dist.join(nbr, col("node") === col("dst"), "full")
-        .select(
-          coalesce(col("node"), col("dst")).as("node"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"))
-        .localCheckpoint(true)
-      releaseCheckpoint(dist) // superseded once `next` materialized
-      dist = next
-    }
-    dist
-  }
-
-  /** Frontier-only BFS — the at-scale refinement [[bfsHops]]'s own
-    * scaladoc names (round-7 verdict #6): with synchronous unweighted
-    * rounds a node's distance never improves after first assignment,
-    * so round k only needs to expand the nodes REACHED IN round k-1
-    * (the frontier), not the whole running dist set. Per round:
-    * frontier⋈edges (edge work proportional to the frontier's
-    * adjacency, not |reached|), a distinct, and one anti-join against
-    * the reached set (the membership structure a production engine
-    * backs with a bitmap/Bloom). On a saturating graph the frontier
-    * empties and later rounds cost ~nothing, where the full-set form
-    * re-joins the ENTIRE reached set against the edge list every
-    * round — measured in BASELINE.md's BFS table. Emits exactly
-    * [[bfsHops]]'s output (the fixed-round gate semantics; the spec
-    * pins equality), and the rel_bfs_frontier gate shares
-    * rel_bfs_hops' unrolled twin.
-    */
-  def bfsHopsFrontier(sources: DataFrame, edges0: DataFrame,
-                      iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 10,
-      s"iters must be in [1, 10] (twin unrolls them): $iters")
-    val edges = edges0.persist()
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    for (k <- 1 to iters) {
-      val reached = frontier.join(edges, col("node") === col("src"))
+    val init = sources.select(col("node"), lit(0L).as("dist"))
+    val (dist, _) = iterate(init, iters) { (dist, k) =>
+      val reached = dist.filter(col("dist") === k - 1)
+        .join(edges, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
-      val newNodes = reached.join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(k.toLong).as("dist"))
-        .localCheckpoint(true)
-      val nextDist = dist.unionAll(newNodes).localCheckpoint(true)
-      // both round-(k-1) frames are superseded once nextDist has
-      // materialized; in round 1 frontier aliases dist (release once)
-      if (frontier ne dist) releaseCheckpoint(frontier)
-      releaseCheckpoint(dist)
-      dist = nextDist
-      frontier = newNodes
-    }
-    releaseCheckpoint(frontier) // the last round's newNodes
+      dist.unionAll(reached.join(dist, Seq("node"), "left_anti")
+        .select(col("node"), lit(k.toLong).as("dist")))
+    }()
     dist
   }
 
@@ -1025,23 +872,29 @@ object Graph {
 
   /** Bounded-round single-source (multi-source) shortest path —
     * synchronous Bellman–Ford, the weighted member of the iterative
-    * family [[bfsHops]] anchors: per round every known distance relaxes
-    * its out-edges (`min(dist + w)` per neighbor) and merges with the
-    * running dist set. After round k every node carries the exact
-    * cheapest cost over paths of ≤ k edges — the bounded-round
+    * family [[bfsHops]] anchors: per round every changed distance
+    * relaxes its out-edges (`min(dist + w)` per neighbor) and merges
+    * with the running dist set. After round k every node carries the
+    * exact cheapest cost over paths of ≤ k edges — the bounded-round
     * semantics a fixed-k gate can pin and the twin can unroll as CTE
     * pairs (negative-cycle-safe by construction: rounds are bounded,
     * and purchase weights are positive anyway).
     *
     * Costs are BIGINT cents ([[purchaseWeightedEdges]]), so `dist + w`
-    * and `min` are exact and order-independent in both engines. Each
-    * round is one keyed join + keyed min-agg + full-outer merge,
-    * re-rooted with `localCheckpoint(eager)` like [[bfsHops]] (the
-    * dist set is referenced twice per round). Unlike unweighted BFS a
-    * settled node CAN improve in a later round (a cheaper many-edge
-    * path), so the frontier refinement is dist-changed nodes, not
-    * first-reached nodes — at 100× the round-k delta set shrinks the
-    * same way BfsProbe measured for frontiers.
+    * and `min` are exact and order-independent in both engines.
+    * Delta-frontier: a round-k relaxation through node n can only
+    * produce a NEW minimum if n's own distance changed in round k-1 (an
+    * unchanged node's offers were already made and absorbed), so each
+    * round expands only the CHANGED set — the classic queue-based /
+    * delta-stepping property. Unlike unweighted BFS a settled node CAN
+    * improve in a later round (a cheaper many-edge path), so the delta
+    * is dist-changed nodes, not first-reached nodes. The loop state is
+    * the merged frame with its `improved` flag (sources start flagged),
+    * so the next delta is a filter over it; per round: delta⋈edges,
+    * one keyed min-agg, one full-outer merge. On a converging graph the
+    * delta empties and later rounds cost ~nothing (BASELINE.md's SSSP
+    * table measured this form against the full-set re-join it
+    * replaced).
     * `sources` is (node); output (node, dist) for nodes within
     * `rounds` edges of a source. */
   def ssspBounded(sources: DataFrame, wedges0: DataFrame,
@@ -1049,23 +902,25 @@ object Graph {
     require(rounds >= 1 && rounds <= 10,
       s"rounds must be in [1, 10] (twin unrolls them): $rounds")
     val wedges = wedges0.persist()
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(wedges, col("node") === col("src"))
+    val init = sources.select(col("node"), lit(0L).as("dist"),
+      lit(true).as("improved"))
+    val (dist, _) = iterate(init, rounds) { (state, _) =>
+      val relaxed = state.filter(col("improved"))
+        .join(wedges, col("node") === col("src"))
         .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("nd"))
-      // the explicit double-coalesce min (engine-portable NULL
-      // handling) — see bfsHops
-      val next = dist.join(relaxed, col("node") === col("dst"), "full")
+      // least() would skip a NULL side here (Spark semantics), but the
+      // double-coalesce form is explicit AND engine-portable — the
+      // DuckDB twin uses the identical expression
+      state.select("node", "dist")
+        .join(relaxed, col("node") === col("dst"), "full")
         .select(
           coalesce(col("node"), col("dst")).as("node"),
           least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"))
-        .localCheckpoint(true)
-      releaseCheckpoint(dist) // superseded once `next` materialized
-      dist = next
-    }
-    dist
+            coalesce(col("nd"), col("dist"))).as("dist"),
+          (col("nd").isNotNull &&
+            (col("node").isNull || col("nd") < col("dist"))).as("improved"))
+    }()
+    dist.select("node", "dist")
   }
 
   /** WEIGHTED PageRank over the purchase graph — transition mass
@@ -1082,7 +937,7 @@ object Graph {
     * Floor leakage: ≤ 1 µ-unit per edge at the share quantization plus
     * the per-round div leakage the unweighted form documents — both
     * engines leak identically. Same keyed join + keyed sum shape and
-    * persist hand-off discipline as [[pageRank]].
+    * [[iterate]] round driver as [[pageRank]].
     * Output: (node_type, key, rank).
     */
   def pageRankWeighted(orders: DataFrame, lineitem: DataFrame,
@@ -1114,107 +969,49 @@ object Graph {
       .persist())
     val nodes = warm(sw.select(col("src").as("node")).persist())
     val nAgg = nodes.agg(count(lit(1)).as("n"))
-    // eager per-round checkpoints — see [[pageRank]] (r13)
-    var ranks = nodes.crossJoin(broadcast(nAgg))
+    val init = nodes.crossJoin(broadcast(nAgg))
       .select(col("node"), expr(s"$TotalMass div n").as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val (ranks, _) = iterate(init, iters) { (ranks, _) =>
       val inMass = ranks.join(shares, col("node") === col("src"))
         .select(col("dst"),
           expr("(rank * ppm) div 1000000").as("contrib"))
         .groupBy("dst").agg(sum("contrib").as("m"))
-      val next = nodes.crossJoin(broadcast(nAgg))
+      nodes.crossJoin(broadcast(nAgg))
         .join(inMass, col("node") === col("dst"), "left")
         .select(col("node"),
           (expr(s"${TotalMass * 15 / 100} div n")
             + expr("(85 * coalesce(m, 0)) div 100")).as("rank"))
-        .localCheckpoint(true)
-      releaseCheckpoint(ranks) // superseded once `next` materialized
-      ranks = next
-    }
+    }()
     ranks
   }
 
-  /** Delta-frontier Bellman–Ford — the at-scale refinement
-    * [[ssspBounded]]'s own scaladoc names (the [[bfsHopsFrontier]]
-    * precedent, weighted): a round-k relaxation through node n can
-    * only produce a NEW minimum if n's own distance changed in round
-    * k-1 (an unchanged node's offers were already made and absorbed),
-    * so each round expands only the CHANGED set instead of the whole
-    * running dist table — the classic queue-based/delta-stepping
-    * property. Per round: delta⋈edges (edge work proportional to the
-    * delta set's adjacency), one full-outer merge that also flags
-    * improvements, and the flagged rows become the next delta. On a
-    * converging graph the delta empties and later rounds cost
-    * ~nothing, where the full-set form re-joins ALL reached nodes
-    * against the edge list every round — measured in BASELINE.md's
-    * SSSP table. Emits exactly [[ssspBounded]]'s rows (the spec
-    * pins equality round for round), so the gate shares the unrolled
-    * twin. */
-  def ssspBoundedDelta(sources: DataFrame, wedges0: DataFrame,
-                       rounds: Int): DataFrame = {
-    require(rounds >= 1 && rounds <= 10,
-      s"rounds must be in [1, 10] (twin unrolls them): $rounds")
-    val wedges = wedges0.persist()
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var delta = dist
-    for (_ <- 1 to rounds) {
-      val relaxed = delta.join(wedges, col("node") === col("src"))
-        .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("nd"))
-      val merged = dist.join(relaxed, col("node") === col("dst"), "full")
-        .select(
-          coalesce(col("node"), col("dst")).as("node"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"),
-          (col("nd").isNotNull &&
-            (col("node").isNull || col("nd") < col("dist"))).as("improved"))
-        .localCheckpoint(true)
-      val nextDelta = merged.filter(col("improved"))
-        .select("node", "dist").localCheckpoint(true)
-      if (delta ne dist) releaseCheckpoint(delta)
-      releaseCheckpoint(dist)
-      dist = merged.select("node", "dist")
-      delta = nextDelta
-    }
-    releaseCheckpoint(delta) // the last round's changed set
-    dist
+  /** The purchase-graph hubs: nodes of degree ≥ 3 × mean degree, over
+    * any (src, …) edge list with both directions emitted. A fixed
+    * threshold either selects nothing or everything as degree scales
+    * with SF (measured sources: 10 / 100 / 1000 hubs at
+    * sf0.001/0.01/0.1). The threshold is one 8-byte driver artifact;
+    * everything else is keyed. Output: (node). */
+  private def hubSources(edges: DataFrame): DataFrame = {
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val thr = edges.agg(count(lit(1)).as("ne"))
+      .crossJoin(deg.agg(count(lit(1)).as("nn")))
+      .select(expr("3 * (ne div nn)").as("t"))
+      .head().getLong(0)
+    deg.filter(col("deg") >= thr).select(col("src").as("node"))
   }
 
   /** Hub-cost gate over the weighted purchase graph: the cheapest
     * ≤-`rounds`-edge path cost (in cents) from each node to the nearest
-    * hub, hubs derived in-plan exactly as [[purchaseHubDistance]]
-    * (degree ≥ 3 × mean; the threshold is the same one 8-byte driver
-    * artifact — weighted edges are one per distinct partner pair, so
-    * the degree sets coincide). Output: (node_type, key, cost). */
+    * hub ([[hubSources]] — weighted edges are one per distinct partner
+    * pair, so the degree sets coincide with [[purchaseHubDistance]]'s).
+    * Output: (node_type, key, cost). */
   def purchaseHubCost(orders: DataFrame, lineitem: DataFrame,
-                      rounds: Int = 3,
-                      deltaOnly: Boolean = false): DataFrame = {
+                      rounds: Int = 3): DataFrame = {
     val wedges = purchaseWeightedEdges(orders, lineitem).persist()
-    val deg = wedges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val thr = wedges.agg(count(lit(1)).as("ne"))
-      .crossJoin(deg.agg(count(lit(1)).as("nn")))
-      .select(expr("3 * (ne div nn)").as("t"))
-      .head().getLong(0)
-    val sources = deg.filter(col("deg") >= thr)
-      .select(col("src").as("node"))
-    val sssp =
-      if (deltaOnly) ssspBoundedDelta(sources, wedges, rounds)
-      else ssspBounded(sources, wedges, rounds)
-    sssp.select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"), col("dist").as("cost"))
+    decodeNode(ssspBounded(hubSources(wedges), wedges, rounds),
+      col("dist").as("cost"))
   }
 
-  /** Hub-distance gate over the purchase graph: how many hops is each
-    * node from the nearest HUB, where hubs are nodes of degree ≥
-    * 3 × mean degree (derived IN-PLAN like [[purchaseKCore]]'s k — a
-    * fixed threshold either selects nothing or everything as degree
-    * scales with SF; measured sources: 10 / 100 / 1000 hubs at
-    * sf0.001/0.01/0.1). The threshold is one 8-byte driver artifact;
-    * everything else is keyed joins. Output: (node_type, key, dist).
-    */
   /** Adamic–Adar link prediction over the customer–part co-purchase
     * bipartite graph: score(a, b) = Σ over shared parts p of
     * round2(1 / ln(deg(p))), where deg(p) counts distinct purchasing
@@ -1269,24 +1066,13 @@ object Graph {
       .limit(k)
   }
 
+  /** Hub-distance gate over the purchase graph: how many hops is each
+    * node from the nearest hub ([[hubSources]]), within `iters` hops.
+    * Output: (node_type, key, dist). */
   def purchaseHubDistance(orders: DataFrame, lineitem: DataFrame,
-                          iters: Int = 3,
-                          frontierOnly: Boolean = false): DataFrame = {
+                          iters: Int = 3): DataFrame = {
     val edges = purchaseEdges(orders, lineitem).persist()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val thr = edges.agg(count(lit(1)).as("ne"))
-      .crossJoin(deg.agg(count(lit(1)).as("nn")))
-      .select(expr("3 * (ne div nn)").as("t"))
-      .head().getLong(0)
-    val sources = deg.filter(col("deg") >= thr)
-      .select(col("src").as("node"))
-    val hops =
-      if (frontierOnly) bfsHopsFrontier(sources, edges, iters)
-      else bfsHops(sources, edges, iters)
-    hops.select(
-      when(col("node") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("node_type"),
-      expr("node div 2").as("key"), col("dist"))
+    decodeNode(bfsHops(hubSources(edges), edges, iters), col("dist"))
   }
 
   /** Deterministic RANDOM-WALK corpus over the purchase graph — the

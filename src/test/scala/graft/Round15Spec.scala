@@ -9,7 +9,7 @@ import graft.operators.Graph
   * driver checks, (b) agree exactly with the fixed-round gate forms at
   * the converged round count, and (c) be TRUE fixpoints — one more
   * round of the identical step changes nothing (or, for PageRank,
-  * moves no rank by more than tol).
+  * stops at the first round whose movement is under its tolerance).
   */
 class Round15Spec extends SparkSpec {
 
@@ -79,29 +79,41 @@ class Round15Spec extends SparkSpec {
     pairs.unpersist()
   }
 
-  test("pageRankFixpoint: terminates, max per-node movement of one " +
-    "more identical step is <= tol, and rounds are monotone in tol") {
-    val tol = 50000000L // 5e7 micro-mass units keeps the spec fast
-    val (ranks, r) = Graph.pageRankFixpoint(orders, lineitem, tol = tol)
-    assert(r >= 2 && r < 60, s"rounds: $r")
-    // replay ONE more step of the identical transition from the
-    // returned (decoded) state and measure the L-infinity movement
-    val st = Graph.prSetup(orders, lineitem)
-    val undecoded = ranks
-      .select((col("key") * 2 +
-        when(col("node_type") === "supplier", 1).otherwise(0))
-        .as("node"), col("rank"))
-      .join(st.deg, "node")
-    val stepped = st.step(undecoded)
-    val delta = stepped
-      .join(undecoded.select(col("node"), col("rank").as("prev")), "node")
-      .agg(max(abs(col("rank") - col("prev"))).as("d"))
-      .head().getLong(0)
-    assert(delta <= tol, s"post-convergence step moved $delta > $tol")
-    // a looser tolerance can only stop sooner
-    val (_, rLoose) =
-      Graph.pageRankFixpoint(orders, lineitem, tol = tol * 100)
-    assert(rLoose <= r, s"loose $rLoose > tight $r")
+  test("pageRankConverged: stops at the first round whose movement is " +
+    "<= the first round's / residualDiv, within maxRounds; a looser " +
+    "residualDiv never stops later") {
+    def rounds(df: org.apache.spark.sql.DataFrame): Int = {
+      val r = df.select("rounds").distinct().collect().map(_.getLong(0))
+      assert(r.length == 1, s"rounds column not constant: ${r.toSeq}")
+      r.head.toInt
+    }
+    val div = 3L
+    val got = Graph.pageRankConverged(orders, lineitem, residualDiv = div)
+    val r = rounds(got)
+    assert(r >= 2 && r <= 10, s"rounds: $r")
+    // plain-Scala replay of the stopping rule over the fixed-round
+    // form's collected ranks: L-infinity movement per round
+    def ranks(i: Int): Map[String, Long] =
+      Graph.pageRank(orders, lineitem, iters = i).collect()
+        .map(x => s"${x.getString(0)}|${x.getLong(1)}" -> x.getLong(2))
+        .toMap
+    val byRound = (1 to r).map(ranks)
+    val init = Graph.TotalMass / byRound.head.size
+    val moves = byRound.indices.map { i =>
+      val prev = if (i == 0) byRound(0).view.mapValues(_ => init).toMap
+        else byRound(i - 1)
+      byRound(i).map { case (k, v) => math.abs(v - prev(k)) }.max
+    }
+    val tol = moves.head / div
+    assert(moves.last <= tol, s"moves $moves, tol $tol")
+    assert(moves.init.forall(_ > tol), s"stopped late: moves $moves")
+    assert(rows(got.drop("rounds")) === rows(Graph.pageRank(orders,
+      lineitem, iters = r)))
+    // a looser tolerance can only stop sooner; the cap always holds
+    assert(rounds(Graph.pageRankConverged(orders, lineitem,
+      residualDiv = 2)) <= r)
+    assert(rounds(Graph.pageRankConverged(orders, lineitem,
+      residualDiv = 1000000L, maxRounds = 3)) <= 3)
   }
 
   test("plan tripwires: q6_tfidf broadcasts the idf side and " +

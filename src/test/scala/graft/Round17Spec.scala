@@ -168,22 +168,36 @@ class Round17Spec extends SparkSpec {
       rows(Graph.purchaseKCore(orders, lineitem, iters = r.head.toInt)))
   }
 
-  // --- bfsHopsFrontier ---
+  // --- bfsHops ---
 
-  test("bfsHopsFrontier emits exactly bfsHops' rows: multi-source min " +
-    "dist, unreachable nodes absent, saturation before iters") {
-    val edges0 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-      .toDF("src", "dst")
+  test("bfsHops equals a plain-Scala BFS: multi-source min dist, " +
+    "unreachable nodes absent, saturation before iters") {
+    // 4-11 links the two source components: node 4 is 3 hops from
+    // source 1 but 2 from source 10
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (4L, 11L))
+    val edges0 = pairs.toDF("src", "dst")
     val edges = edges0.unionAll(
       edges0.select(col("dst").as("src"), col("src").as("dst")))
-    val sources = Seq(1L, 10L).toDF("node")
+    val sources = Seq(1L, 10L)
+    // queue BFS to saturation, then cut at the round count
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    val hops = scala.collection.mutable.Map(sources.map(_ -> 0L): _*)
+    val queue = scala.collection.mutable.Queue(sources: _*)
+    while (queue.nonEmpty) {
+      val n = queue.dequeue()
+      for (m <- adj.getOrElse(n, Nil) if !hops.contains(m)) {
+        hops(m) = hops(n) + 1
+        queue.enqueue(m)
+      }
+    }
     for (iters <- Seq(1, 2, 5)) {
-      val full = Graph.bfsHops(sources, edges, iters)
-      val front = Graph.bfsHopsFrontier(sources, edges, iters)
-      assert(rows(front) === rows(full), s"iters=$iters")
+      val want = hops.toSeq.filter(_._2 <= iters)
+        .map { case (n, d) => s"$n|$d" }.sorted
+      assert(rows(Graph.bfsHops(sources.toDF("node"), edges, iters)) ===
+        want, s"iters=$iters")
     }
     // node 20 exists nowhere near a source — absent from the output
-    assert(!rows(Graph.bfsHopsFrontier(sources, edges, 5))
+    assert(!rows(Graph.bfsHops(sources.toDF("node"), edges, 5))
       .exists(_.startsWith("20|")))
   }
 

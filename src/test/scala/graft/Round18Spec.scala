@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Graph, HtmlText, Relational, TextStats}
+import graft.operators.{Dedup, Graph, HtmlText, Relational, TextStats}
 
 /** Round-9 pins: the persisted-tokenizer artifact (train→write→apply
   * bit-identity with the in-plan encode, artifact layout contract) and
@@ -222,16 +222,25 @@ class Round18Spec extends SparkSpec {
     assert(dists(3) === Map(1L -> 0L, 2L -> 20L, 3L -> 10L, 4L -> 25L))
   }
 
-  test("ssspBoundedDelta: emits exactly ssspBounded's rows round for " +
+  test("ssspBounded equals a plain synchronous Bellman-Ford round for " +
     "round (including the settled-node-improvement rounds)") {
-    val wedges = Seq(
+    val edges = Seq(
       (1L, 2L, 100L), (1L, 3L, 10L), (3L, 2L, 10L), (2L, 4L, 5L),
       (4L, 5L, 1L), (2L, 5L, 50L))
-      .toDF("src", "dst", "w")
+    val wedges = edges.toDF("src", "dst", "w")
     val sources = Seq(1L).toDF("node")
-    for (r <- 1 to 5)
-      assert(rows(Graph.ssspBoundedDelta(sources, wedges, r)) ===
-        rows(Graph.ssspBounded(sources, wedges, r)), s"rounds=$r")
+    // every known distance relaxes every out-edge, from the previous
+    // round's distances only
+    var dist = Map(1L -> 0L)
+    for (r <- 1 to 5) {
+      val offers = for ((s, d, w) <- edges; ds <- dist.get(s))
+        yield d -> (ds + w)
+      val best = offers.groupMapReduce(_._1)(_._2)(math.min)
+      dist = (dist.keySet ++ best.keySet)
+        .map(n => n -> (dist.get(n) ++ best.get(n)).min).toMap
+      assert(rows(Graph.ssspBounded(sources, wedges, r)) ===
+        dist.toSeq.map { case (n, c) => s"$n|$c" }.sorted, s"rounds=$r")
+    }
   }
 
   test("ssspBounded: multi-source takes the per-node minimum over " +
@@ -246,18 +255,71 @@ class Round18Spec extends SparkSpec {
   test("iterative loops release superseded checkpoint blocks: only " +
     "O(1) frames stay resident after a multi-round run") {
     val sc = spark.sparkContext
+    // the 41-node chain, as an edge list, a weighted edge list, a
+    // canonical pair list and a purchase graph (customer i buys from
+    // suppliers i and i+1), plus a near-dup chain of documents
     val chain = (1L to 40L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-    val before = sc.getPersistentRDDs.size
-    Graph.bfsHopsFrontier(Seq(1L).toDF("node"),
-      chain.toDF("src", "dst"), 8).count()
-    Graph.ssspBounded(Seq(1L).toDF("node"),
-      chain.map { case (a, b) => (a, b, 2L) }.toDF("src", "dst", "w"),
-      8).count()
-    val leaked = sc.getPersistentRDDs.size - before
-    // 8 rounds each would hold ~25 superseded frames without the
-    // release discipline; what may stay is the two final dist frames
-    // plus the two persisted edge lists
-    assert(leaked <= 4, s"resident frames grew by $leaked (expected <= 4)")
+    val edges = chain.toDF("src", "dst")
+    val wedges = chain.map { case (a, b) => (a, b, 2L) }
+      .toDF("src", "dst", "w")
+    val pairs = (1L to 40L).map(i => (i, i + 1)).toDF("key_a", "key_b")
+    val labels0 = (1L to 41L).toDF("node")
+      .select(col("node"), col("node").as("lbl"))
+    val src = Seq(1L).toDF("node")
+    val orders = (1L to 20L).map(i => (i, i)).toDF("o_orderkey", "o_custkey")
+    val lineitem = (1L to 20L).flatMap(i => Seq((i, i), (i, i + 1)))
+      .toDF("l_orderkey", "l_suppkey")
+    val docs = (1L to 12L).map(i =>
+      (i, (i until i + 12).map(w => s"w$w").mkString(" ")))
+      .toDF("doc_id", "text")
+    // every Graph.iterate caller, 8 rounds or its cap
+    val callers = Seq[(String, () => Long)](
+      "pageRank" -> (() => Graph.pageRank(orders, lineitem, 8).count()),
+      "personalizedPageRank" -> (() =>
+        Graph.personalizedPageRank(orders, lineitem, 8).count()),
+      "pageRankConverged" -> (() => Graph.pageRankConverged(orders,
+        lineitem, residualDiv = 1000000L, maxRounds = 8).count()),
+      "pageRankOverEdges" -> (() =>
+        Graph.pageRankOverEdges(wedges, 8).count()),
+      "minLabelPropagate" -> (() =>
+        Graph.minLabelPropagate(labels0, edges, 8).count()),
+      "minLabelFixpoint" -> (() =>
+        Graph.minLabelFixpoint(labels0, edges, 8)._1.count()),
+      "labelPropagate" -> (() =>
+        Graph.labelPropagate(labels0, edges, 8).count()),
+      "kCorePeel" -> (() => Graph.kCorePeel(pairs, 1, 8).count()),
+      "kCoreFixpoint" -> (() => Graph.kCoreFixpoint(pairs, 2, 8)._1.count()),
+      "purchaseKCore" -> (() =>
+        Graph.purchaseKCore(orders, lineitem, 8).count()),
+      "bfsHops" -> (() => Graph.bfsHops(src, edges, 8).count()),
+      "ssspBounded" -> (() => Graph.ssspBounded(src, wedges, 8).count()),
+      "assignCanonical" -> (() => Dedup.assignCanonical(docs,
+        threshold = 0.5, maxIter = 8, driverCcMaxEdges = 0L).count()))
+    // hold every persisted RDD strongly while the callers run: the
+    // context's persisted-RDD map has weak values and its cleaner
+    // unpersists collected frames, so a GC landing mid-call would
+    // otherwise hide a missing release
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(held.add)
+    }
+    sc.addSparkListener(holder)
+    try {
+      for ((name, run) <- callers) {
+        val before = sc.getPersistentRDDs.size
+        run()
+        val grown = sc.getPersistentRDDs.size - before
+        // what may stay is the operator's own persisted inputs plus the
+        // final state (7 for assignCanonical, the most); without the
+        // release every call would also keep its superseded rounds
+        assert(grown <= 8, s"$name: resident frames grew by $grown")
+      }
+    } finally {
+      sc.removeSparkListener(holder)
+      held.clear()
+    }
   }
 
   test("pageRankWeighted: mass follows edge weight — the heavier " +
