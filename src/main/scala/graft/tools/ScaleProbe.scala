@@ -25,8 +25,8 @@ object ScaleProbe {
       replicas += r
       r
     }
+    val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     lazy val big = replica("docs") {
-      val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       (0 until k).map(i =>
           base.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
             col("text"), col("source"), col("lang")))
@@ -183,9 +183,9 @@ object ScaleProbe {
     // candidate join stays keyed, no BNLJ blowup), and a K×-both-sides
     // load for the sign-bucket top-k (output is linear: k rows per
     // query).
+    val embBase = spark.read
+      .parquet("/root/testdata/sf0.1/embeddings.parquet")
     lazy val embBig = replica("vectors") {
-      val embBase = spark.read
-        .parquet("/root/testdata/sf0.1/embeddings.parquet")
       (0 until k).map(i =>
           embBase.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
             col("embedding")))
