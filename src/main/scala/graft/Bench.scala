@@ -43,20 +43,18 @@ object Bench {
     val spark = GraftSession.local("graft-bench", cpus.toInt)
 
     // Force full materialization of every query (count() lets Catalyst
-    // prune projections a user would actually consume).
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      Housekeeping.release(spark)
-      // a failed query must not look FAST — surface it as a penalty
-      if (ok) dt else 9999.0
-    }
+    // prune projections a user would actually consume). The gate's
+    // scope releases its frames after its time is taken.
+    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try Scope.run {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        // a failed query must not look FAST — surface it as a penalty
+        9999.0
+      }
 
     // Machine-load sentinel: a fixed CPU-bound job (no I/O, no shuffle,
     // SF-independent) timed against a recorded quiet-machine constant.
@@ -77,7 +75,8 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     for (name <- Seq("q6_tfidf", "rel_top_customers", "sim_topk_brute"))
       SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        try Scope.run(fn(spark, warmDir).write.format("noop")
+          .mode("overwrite").save())
         catch { case _: Throwable => () }
       }
 

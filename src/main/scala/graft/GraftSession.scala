@@ -43,12 +43,14 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    quietStreamingWarnings()
+    quietBenignWarnings()
     s
   }
 
-  /** Streaming queries log known-benign WARN lines that bury new
-    * warnings. From `ResolveWriteToStream`, on every query:
+  /** Known-benign WARN lines that would bury new warnings, each dropped
+    * by a filter on its logger; the loggers' other warnings (say, a
+    * failed checkpoint-exists probe) still show. Streaming queries log,
+    * from `ResolveWriteToStream`, on every query:
     *  - `Temporary checkpoint location created ...` — a query without
     *    a `checkpointLocation` (all but the resume gate's) drains
     *    through a temp dir that is deleted once it stops;
@@ -60,25 +62,30 @@ object GraftSession {
     *  - `Disabling AQE since AQE is not supported in stateful
     *    workloads.` — by design: state-store partitions must keep the
     *    checkpoint's shuffle partition count, which AQE would change.
-    * A filter on each logger drops exactly these messages; the loggers'
-    * other warnings (say, a failed checkpoint-exists probe) still show. */
-  private def quietStreamingWarnings(): Unit = {
+    * From `MapPartitionsRDD`, on each checkpoint [[Scope]] releases:
+    *  - `RDD N was locally checkpointed, its lineage has been truncated
+    *    and cannot be recomputed after unpersisting` — by then nothing
+    *    reads it again. */
+  private def quietBenignWarnings(): Unit = {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LoggerContext}
     import org.apache.logging.log4j.core.config.LoggerConfig
     import org.apache.logging.log4j.core.filter.RegexFilter
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val conf = ctx.getConfiguration
+    val streaming = "org.apache.spark.sql.execution.streaming.runtime"
     Seq(
-      "ResolveWriteToStream" ->
+      s"$streaming.ResolveWriteToStream" ->
         ("(?s)(Temporary checkpoint location created |" +
           "spark\\.sql\\.adaptive\\.enabled is not supported in " +
           "streaming ).*"),
-      "MicroBatchExecution" ->
+      s"$streaming.MicroBatchExecution" ->
         ("(?s)Disabling AQE since AQE is not supported in stateful " +
-          "workloads\\..*")
-    ).foreach { case (cls, regex) =>
-      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+          "workloads\\..*"),
+      "org.apache.spark.rdd.MapPartitionsRDD" ->
+        ("(?s)RDD \\d+ was locally checkpointed, its lineage has been " +
+          "truncated and cannot be recomputed after unpersisting.*")
+    ).foreach { case (name, regex) =>
       if (!conf.getLoggers.containsKey(name)) {
         // null level: the logger keeps inheriting the root's level
         val lc = new LoggerConfig(name, null, true)

@@ -719,7 +719,7 @@ object SparkEntry {
          |SELECT doc_id, word, cnt, tf, tf_idf
          |FROM q6 WHERE doc_id % 2 = 1""".stripMargin) { (s, dir) =>
       val out = scratchDir("mergeschema")
-      val q6 = TfIdfOps.tfIdfPipeline(docs(s, dir)).persist()
+      val q6 = Scope.hold(TfIdfOps.tfIdfPipeline(docs(s, dir)))
       q6.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "word", "cnt")
         .write.mode("overwrite").parquet(s"$out/b1")

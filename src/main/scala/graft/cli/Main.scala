@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.{GraftSession, Housekeeping, Tables}
+import graft.{GraftSession, Scope, Tables}
 import graft.io.CompatIo
 import graft.operators._
 
@@ -60,11 +60,11 @@ object Main {
         case _ =>
           result.write.mode(SaveMode.Overwrite).parquet(output)
       }
-    // operators persist() intermediates they read more than once (the
-    // TF table, shingle sets); a cached plan over the input path keeps
-    // serving the old rows after the files change, so release them once
-    // the result is written
-    try write(job match {
+    // operators hold intermediates they read more than once (the TF
+    // table, shingle sets); a cached plan over the input path keeps
+    // serving the old rows after the files change, so the job's scope
+    // releases them once the result is written, and only them
+    Scope.run(write(job match {
       case "sim-topk" =>
         Similarity.bruteTopK(
           emb.filter(org.apache.spark.sql.functions.col("vec_id") %
@@ -127,8 +127,7 @@ object Main {
             opts.getOrElse("query-every", "50").toInt === 0), emb,
           k = opts.getOrElse("k", "10").toInt)
       case other => sys.error(s"unknown job '$other'. " + usage)
-    })
-    finally Housekeeping.release(spark)
+    }))
   }
 
   /** Reference column orders for the ref-csv format (FIXTURES.md §A).

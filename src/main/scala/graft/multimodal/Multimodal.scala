@@ -210,7 +210,7 @@ object Multimodal {
     val code = (0 until FeatureDims)
       .map(d => when(col(s"f$d") >= 0.5, lit(1L << d)).otherwise(lit(0L)))
       .reduce(_ + _)
-    val coded = f.withColumn("code", code).persist()
+    val coded = graft.Scope.hold(f.withColumn("code", code))
     def side(tag: String) = coded.select(
       (Seq(col("code"), col("doc_id").as(s"id_$tag"),
         col("n_bytes").as(s"nb_$tag")) ++

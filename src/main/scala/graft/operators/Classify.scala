@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.functions.Fns.round2
 
 /** In-plan trained text classification — the quality/language scorer
@@ -39,7 +40,7 @@ object Classify {
     */
   def nbLang(docs: DataFrame): DataFrame = {
     // tokenized corpus feeds 3 aggregates (doc-word, class-word, vocab)
-    val toks = WikiText.tokens(docs).persist()
+    val toks = Scope.hold(WikiText.tokens(docs))
     val docLang = docs.select(col("doc_id"), col("lang"))
     val tokLang = toks.join(docLang, "doc_id")
 
@@ -103,9 +104,9 @@ object Classify {
     * Output: (lang, n_true, n_pred, tp, precision, recall, f1).
     */
   def nbEval(docs: DataFrame): DataFrame = {
-    val j = nbLang(docs).select(col("doc_id"), col("pred_lang"))
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .persist() // two consumers: by-true and by-predicted rollups
+    // two consumers: by-true and by-predicted rollups
+    val j = Scope.hold(nbLang(docs).select(col("doc_id"), col("pred_lang"))
+      .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
     val bt = j.groupBy(col("lang").as("cls"))
       .agg(count(lit(1)).as("n_true"),
         sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
@@ -220,11 +221,8 @@ object Classify {
   }
 
   private def lrWeights(docs: DataFrame, dims: Int, steps: Int,
-                        lr: Double): Seq[(Int, Double)] = {
-    val f = lrFeatures(docs, dims).persist()
-    val w = lrWeightsOn(f, docs, dims, steps, lr)
-    f.unpersist()
-    w
+                        lr: Double): Seq[(Int, Double)] = Scope.run {
+    lrWeightsOn(Scope.hold(lrFeatures(docs, dims)), docs, dims, steps, lr)
   }
 
   /** Scoring tail over a shared feature frame and a weight frame
@@ -268,8 +266,8 @@ object Classify {
     // ONE feature build feeds training (materialized by the per-step
     // collects) and the returned scoring plan; the cache outlives the
     // call because the output depends on it (the cdcDedupRewrite
-    // convention — Housekeeping.release drains post-query)
-    val f = lrFeatures(docs, dims).persist()
+    // convention)
+    val f = Scope.hold(lrFeatures(docs, dims))
     val wDf = lrWeightsOn(f, docs, dims, steps, lr).toDF("j", "wj")
     lrScoreOn(f, docs, wDf)
   }
@@ -320,14 +318,14 @@ object Classify {
                        steps: Int = 3, lr: Double = 1.0): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val f = lrFeatures(docs, dims).persist()
+    val f = Scope.hold(lrFeatures(docs, dims))
     lrWeightsOn(f, docs, dims, steps, lr).toDF("j", "w")
       .select(col("j").cast("long").as("j"), col("w"))
       .coalesce(1).write.mode("overwrite").parquet(artDir)
     val wServed = spark.read.parquet(artDir)
       .select(col("j").cast("int").as("j"), col("w").as("wj"))
     // scores feed the confusion rollup AND the AUC histogram
-    val sc = lrScoreOn(f, docs, wServed).persist()
+    val sc = Scope.hold(lrScoreOn(f, docs, wServed))
     val eval = sc
       .agg(count(lit(1)).as("n"),
         sum(when(col("pred") && col("y") === 1L, 1L).otherwise(0L))
@@ -347,8 +345,9 @@ object Classify {
     * aggregation — always exactly one row; NULL auc whenever either
     * class is absent (the pos·neg pair mass is 0). */
   private def lrAucFromScores(scored: DataFrame): DataFrame = {
-    val g = scored.groupBy("p", "y").agg(count(lit(1)).as("cnt_sc"))
-      .persist() // histogram + per-cell rank both consume it
+    // histogram + per-cell rank both consume it
+    val g = Scope.hold(scored.groupBy("p", "y")
+      .agg(count(lit(1)).as("cnt_sc")))
     val hist = g.groupBy("p").agg(sum("cnt_sc").as("cnt_s"))
     // partition-less window over the DISTINCT 1e-6-grid score
     // histogram (bounded by cardinality — the rel_auc sanction class)
@@ -519,9 +518,9 @@ object Classify {
     val cnt = lrMcBucketCounts(docs, dims)
     // features feed every step twice + final scoring; labels feed
     // every step's error + the output join (cache outlives the call —
-    // output depends on it; Housekeeping.release drains)
-    val f = lrMcFeatures(docs, cnt).persist()
-    val lbl = lrMcLabels(docs, cnt, classes).persist()
+    // output depends on it)
+    val f = Scope.hold(lrMcFeatures(docs, cnt))
+    val lbl = Scope.hold(lrMcLabels(docs, cnt, classes))
     val n = docs.count().toDouble
     var w: Seq[(Int, Int, Double)] =
       for (c <- 0 until classes; j <- -1 until dims)

@@ -67,16 +67,16 @@ object Curate {
                  salt: String = "graft-prep"): DataFrame = {
     val sig = TextStats.signals(docs)
       .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-    val base = docs.select(col("doc_id"), col("source"),
+    // two consumers: first-occurrence agg + join-back
+    val base = graft.Scope.hold(docs.select(col("doc_id"), col("source"),
         md5(TextStats.normalized(col("text"))).as("fp"),
         col("n_chars"))
       .join(sig, "doc_id")
-      .filter(col("quality_score") >= minQuality)
-      .persist() // two consumers: first-occurrence agg + join-back
-    val kept = base
+      .filter(col("quality_score") >= minQuality))
+    // two consumers: avail stats + the threshold apply
+    val kept = graft.Scope.hold(base
       .join(base.groupBy("fp").agg(min(col("doc_id")).as("kid")), "fp")
-      .filter(col("doc_id") === col("kid"))
-      .persist() // two consumers: avail stats + the threshold apply
+      .filter(col("doc_id") === col("kid")))
     val stats = kept.groupBy("source")
       .agg(sum(col("n_chars")).as("avail"))
       .withColumn("w",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), exact n-gram Jaccard, MinHash+LSH near-dup,
   * SimHash near-dup, and embedding-cosine near-dup.
@@ -60,7 +62,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.8,
                         n: Int = 3): DataFrame = {
     // consumed 4× (candidate join ×2, verify ×2) — materialize once
-    val sh = shingles(docs, n).persist()
+    val sh = Scope.hold(shingles(docs, n))
     jaccardVerifySized(sh, candidatesByPrefix(sh, threshold), threshold)
   }
 
@@ -239,17 +241,12 @@ object Dedup {
     // measured on dedup_incremental/dedup_index_artifact, the eager
     // cache-fill jobs cost more than the concurrent-consumer
     // redundancy they prevent at these frame sizes.
-    val sh = shingles(docs, n).persist()
-    // persist: the band self-join reads this twice; unpersisted it
-    // would run the MinHash aggregation once per side
-    val bandSigs = bandSignatures(sh, numPerm, bands).persist()
-    // r14 re-measure of the r13 "no eager warm here" note: profiled
-    // through pipe_curate, the one-action plan evaluated the shingle
-    // chain SEVEN times (~0.75 s each) through its racing exchange
-    // subtrees (sizes + both verify sides + both band sides). One
-    // count materializes bandSigs AND sh (bandSigs consumes every sh
-    // row on the way — the prSetup warm-deg device)
-    bandSigs.count()
+    val sh = Scope.hold(shingles(docs, n))
+    // the band self-join reads this twice. Warm, unlike the r13 note
+    // above: profiled r14 through pipe_curate, the one-action plan ran
+    // the shingle chain SEVEN times (~0.75 s each) through its racing
+    // exchange subtrees; one count fills bandSigs AND sh
+    val bandSigs = Scope.warm(bandSignatures(sh, numPerm, bands))
     val l = bandSigs.as("l")
     val r = bandSigs.as("r")
     val candidates = l.join(r,
@@ -285,8 +282,8 @@ object Dedup {
     val isDelta = pmod(col("doc_id"), lit(deltaMod)) === 0
     // shingles feed signatures + two verifies — materialize once (not
     // eagerly: the minHashLsh measurement, r13)
-    val sh = shingles(docs, n).persist()
-    val bandSigs = bandSignatures(sh, numPerm, bands).persist()
+    val sh = Scope.hold(shingles(docs, n))
+    val bandSigs = Scope.hold(bandSignatures(sh, numPerm, bands))
     incrementalTail(docs.filter(isDelta).select(col("doc_id")), sh,
       bandSigs.filter(isDelta), bandSigs.filter(!isDelta), threshold)
   }
@@ -351,8 +348,8 @@ object Dedup {
     * The LSH parameters are part of the index contract — pass the same
     * (n, numPerm, bands) to the readers. */
   def dedupIndexWrite(corpus: DataFrame, dir: String, n: Int = 3,
-                      numPerm: Int = 128, bands: Int = 32): Unit = {
-    val sh = shingles(corpus, n).persist()
+                      numPerm: Int = 128, bands: Int = 32): Unit = Scope.run {
+    val sh = Scope.hold(shingles(corpus, n))
     sh.write.mode("overwrite").parquet(s"$dir/shingles")
     bandSignatures(sh, numPerm, bands)
       // cluster by the partition column before the partitioned write:
@@ -364,7 +361,6 @@ object Dedup {
       .hint("rebalance", col("band"))
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$dir/bands")
-    sh.unpersist()
   }
 
   /** APPEND a deduped delta's signatures and shingles to the stored
@@ -373,14 +369,13 @@ object Dedup {
     * equals a full index rebuild over the union (the ivfIndexAppend
     * argument). Call with the KEPT delta docs. */
   def dedupIndexAppend(keptDelta: DataFrame, dir: String, n: Int = 3,
-                       numPerm: Int = 128, bands: Int = 32): Unit = {
-    val sh = shingles(keptDelta, n).persist()
+                       numPerm: Int = 128, bands: Int = 32): Unit = Scope.run {
+    val sh = Scope.hold(shingles(keptDelta, n))
     sh.write.mode("append").parquet(s"$dir/shingles")
     bandSignatures(sh, numPerm, bands)
       .hint("rebalance", col("band")) // see dedupIndexWrite (guide §6)
       .write.mode("append").partitionBy("band")
       .parquet(s"$dir/bands")
-    sh.unpersist()
   }
 
   /** Dedup a delta against the persisted [[dedupIndexWrite]] index:
@@ -400,15 +395,15 @@ object Dedup {
     * band-signature frames EXPOSED, so a streaming ingest can append
     * the surviving subset back to the index without recomputing either
     * (see [[dedupIndexAppendFrom]]). Both auxiliary frames arrive
-    * persisted; the caller owns their lifecycle.
+    * held in the caller's scope.
     * Returns (result, batchShingles, batchBandSigs). */
   private[graft] def incrementalMinHashFromIndexOpen(
       delta: DataFrame, dir: String, threshold: Double = 0.8,
       n: Int = 3, numPerm: Int = 128,
       bands: Int = 32): (DataFrame, DataFrame, DataFrame) = {
     val spark = delta.sparkSession
-    val shDelta = shingles(delta, n).persist()
-    val deltaB = bandSignatures(shDelta, numPerm, bands).persist()
+    val shDelta = Scope.hold(shingles(delta, n))
+    val deltaB = Scope.hold(bandSignatures(shDelta, numPerm, bands))
     val corpusB = spark.read.parquet(s"$dir/bands")
       .select(col("doc_id"), col("band").cast("int").as("band"),
         col("sig"))
@@ -659,14 +654,14 @@ object Dedup {
     * parameters are part of the index contract — pass the same
     * (n, log2Bits, numHashes) to [[decontaminateFromIndex]]. */
   def decontamIndexWrite(benchmark: DataFrame, dir: String, n: Int = 5,
-                         log2Bits: Int = 21, numHashes: Int = 3): Unit = {
+                         log2Bits: Int = 21, numHashes: Int = 3): Unit =
+  Scope.run {
     requireBloomParams(log2Bits, numHashes)
-    val benchShingles = shingles(benchmark, n).select("s").distinct()
-      .persist()
+    val benchShingles = Scope.hold(shingles(benchmark, n).select("s")
+      .distinct())
     benchShingles.write.mode("overwrite").parquet(s"$dir/shingles")
     bloomSparseWords(benchShingles, log2Bits, numHashes)
       .write.mode("overwrite").parquet(s"$dir/bloom")
-    benchShingles.unpersist()
   }
 
   /** Decontaminate a corpus against a persisted [[decontamIndexWrite]]
@@ -711,13 +706,13 @@ object Dedup {
     // the normalize regex is the expensive half of this projection and
     // BOTH the fingerprint branch and the representative-text branch
     // consume it — materialize once (r14 profile: two identical 0.77 s
-    // map jobs per pipe_curate/dedup_assign action). One repExact
-    // count fills the normed cache on the way (fp reads every row)
-    val normed = docs.select(col("doc_id"),
-      TextStats.normalized(col("text")).as("text")).persist()
+    // map jobs per pipe_curate/dedup_assign action). Warming repExact
+    // fills the normed cache on the way (fp reads every row)
+    val normed = Scope.hold(docs.select(col("doc_id"),
+      TextStats.normalized(col("text")).as("text")))
     val fp = normed.select(col("doc_id"), md5(col("text")).as("fp"))
-    val repExact = fp.groupBy("fp").agg(min("doc_id").as("rep")).persist()
-    repExact.count()
+    val repExact = Scope.warm(fp.groupBy("fp")
+      .agg(min("doc_id").as("rep")))
     val docRep = fp.join(repExact, "fp").select("doc_id", "rep")
     val repDocs = normed.join(repExact.select(col("rep")),
       col("doc_id") === col("rep")).select("doc_id", "text")
@@ -732,7 +727,7 @@ object Dedup {
     // iteration outright (the edge LIST is small even when the corpus
     // isn't; this is the same small-side reasoning as a broadcast join).
     // 1M edges ≈ 16 MB of id pairs on the driver — broadcast-sized.
-    val pairsPersisted = pairs.persist()
+    val pairsPersisted = Scope.hold(pairs)
     val pairCount = pairsPersisted.count()
     val idType = docRep.schema("rep").dataType
     val lt = idLessThan(idType)
@@ -771,7 +766,7 @@ object Dedup {
     val edgesParent = pairsPersisted.unionByName(
       pairsPersisted.select(col("doc_b").as("doc_a"),
         col("doc_a").as("doc_b")))
-    val edges = rebind(edgesParent).persist()
+    val edges = Scope.hold(rebind(edgesParent))
     // Graph.iterate re-roots each round: the pointer-jump step
     // references `labels` twice, so lineage would DOUBLE per iteration —
     // the logical plan alone OOMs after ~20 rounds
@@ -869,11 +864,11 @@ object Dedup {
     // 4×-consumed rep subtree below — materialize once, or every
     // consumer re-runs the groupBy + array-key join shuffles
     // (measured 4× the query time at sf0.1 without these persists)
-    val withRep = base.join(rep, "vec").persist() // (vec, vec_id, rep)
+    val withRep = Scope.hold(base.join(rep, "vec")) // (vec, vec_id, rep)
     val reps = withRep.filter(col("vec_id") === col("rep"))
       .select("vec_id", "vec")
     // consumed 4× (banding self-join l/r, verify x/y)
-    val n = Similarity.withNorm(reps, "vec_id", "vec").persist()
+    val n = Scope.hold(Similarity.withNorm(reps, "vec_id", "vec"))
     // rows-per-band from the threshold: largest r (dividing nPlanes)
     // whose miss probability for a pair AT the threshold stays under
     // bandMissProb — bigger r prunes harder, smaller r recalls better.
@@ -960,12 +955,12 @@ object Dedup {
     // window (same degenerate-doc rule as [[shingles]])
     val win = transform(sequence(lit(1), nWindows),
       i => struct(i.as("i"), concat_ws(" ", slice(t, i, lit(w))).as("s")))
-    val grams = docs
+    // two consumers: global counts + join-back
+    val grams = Scope.hold(docs
       .select(col(idCol).as("doc_id"), size(t).as("n_toks"),
         explode(win).as("g"))
       .select(col("doc_id"), col("n_toks"),
-        col("g.i").as("i"), col("g.s").as("s"))
-      .persist() // two consumers: global counts + join-back
+        col("g.i").as("i"), col("g.s").as("s")))
     val dupGrams = grams.groupBy("s")
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2)
@@ -1077,7 +1072,7 @@ object Dedup {
     // exchange carries only true pairs (each ≤ a handful of shared
     // variants), not the full candidate expansion: levenshtein on a
     // short key is far cheaper than shuffling the occurrence
-    val variants0 = variants.persist()
+    val variants0 = Scope.hold(variants)
     val a = variants0.select(col("variant"), col("key").as("key_a"),
       col("cnt").as("cnt_a"))
     val b = variants0.select(col("variant"), col("key").as("key_b"),
@@ -1189,7 +1184,7 @@ object Dedup {
     val cent = cand.orderBy(col("vec_id").asc).limit(k)
       .select(col("vec_id").as("cid"), col("vec").as("cvec"),
         col("norm").as("cnorm"))
-    cand.crossJoin(broadcast(cent))
+    Scope.hold(cand.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("vec"), col("norm"),
         struct((Similarity.dot(col("vec"), col("cvec"))
           / (col("norm") * col("cnorm"))).as("cos"),
@@ -1198,8 +1193,7 @@ object Dedup {
       .agg(first(col("vec")).as("vec"), first(col("norm")).as("norm"),
         max(col("sc")).as("best"))
       .select(col("vec_id"), col("vec"), col("norm"),
-        (-col("best.ncid")).as("cid"))
-      .persist()
+        (-col("best.ncid")).as("cid")))
   }
 
   /** Cross-source near-dup contamination MATRIX — the corpus-analysis
@@ -1275,12 +1269,11 @@ object Dedup {
     // historical 16-cluster behavior while the duel's quadratic term
     // stays corpus-size-independent per cluster. Pass
     // targetClusterPop = 0 for the legacy fixed-k arm.
-    val assigned = semanticAssign(emb, nClusters, idCol, vecCol,
+    val assigned = Scope.hold(semanticAssign(emb, nClusters, idCol, vecCol,
         targetClusterPop)
       .join(q, Seq("vec_id"), "left")
       .select(col("vec_id"), col("vec"), col("norm"), col("cid"),
-        coalesce(col("q"), lit(0.0)).as("q"))
-      .persist()
+        coalesce(col("q"), lit(0.0)).as("q")))
     val a = assigned.select(col("cid"), col("vec_id").as("ia"),
       col("vec").as("va"), col("norm").as("na"), col("q").as("qa"))
     val b = assigned.select(col("cid"), col("vec_id").as("ib"),
@@ -1341,7 +1334,7 @@ object Dedup {
         s"(columns: ${quality.columns.mkString(", ")})")
     val q = quality.select(col(idCol).as("vec_id"),
       col(qCol).cast("double").as("q"))
-    val members = Similarity.knnComponentsIvf(emb, k, nCentroids,
+    val members = Scope.hold(Similarity.knnComponentsIvf(emb, k, nCentroids,
         nProbe, maxRounds)
       .join(q, Seq("vec_id"), "left")
       // enforce the non-negative-id contract in-plan (same guard
@@ -1352,8 +1345,7 @@ object Dedup {
           col("vec_id").cast("string"))))
           .otherwise(col("vec_id")).as("vec_id"),
         col("component"), coalesce(col("q"), lit(0.0)).as("q"))
-      .join(Similarity.withNorm(emb, idCol, vecCol), Seq("vec_id"))
-      .persist()
+      .join(Similarity.withNorm(emb, idCol, vecCol), Seq("vec_id")))
     val a = members.select(col("component"), col("vec_id").as("ia"),
       col("vec").as("va"), col("norm").as("na"), col("q").as("qa"))
     val b = members.select(col("component"), col("vec_id").as("ib"),
@@ -1372,13 +1364,12 @@ object Dedup {
 
   def resolveEntities(df: DataFrame, strCol: String,
                       iters: Int = 3): DataFrame = {
-    val vocab = df
+    val vocab = Scope.hold(df
       .select(lower(trim(col(strCol))).as("key"))
       .filter(length(col("key")) > 0)
-      .groupBy("key").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val pairs = editDistancePairs(df, strCol).persist()
-    // force both spines NOW (the Graph.warm device): the label-prop
+      .groupBy("key").agg(count(lit(1)).as("cnt")))
+    val pairs = Scope.hold(editDistancePairs(df, strCol))
+    // force both spines NOW (the Scope.warm device): the label-prop
     // round-1 checkpoint and the final rollup reach them through
     // separate exchange subtrees that otherwise race the SymSpell
     // delete-join cold — profiled r14: two identical 1.1 s 32-task
@@ -1450,8 +1441,8 @@ object Dedup {
   }
 
   def chunkDupStats(docs: DataFrame, avgTokens: Int = 16): DataFrame = {
-    val chunks = TextStats.cdcChunk(docs, avgTokens)
-      .select("doc_id", "chunk_md5").persist()
+    val chunks = Scope.hold(TextStats.cdcChunk(docs, avgTokens)
+      .select("doc_id", "chunk_md5"))
     val freq = chunks.groupBy("chunk_md5")
       .agg(countDistinct(col("doc_id")).as("nd"))
     chunks.join(freq, "chunk_md5")
@@ -1493,8 +1484,8 @@ object Dedup {
   def chunkDedupRewrite(docs: DataFrame, w: Int = 32,
                         idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
-    val chunks = chunkTiles(docs, w, idCol, textCol)
-      .persist() // two consumers: first-occurrence argmin + join-back
+    // two consumers: first-occurrence argmin + join-back
+    val chunks = Scope.hold(chunkTiles(docs, w, idCol, textCol))
     val firstOcc = chunks.groupBy("ctext")
       .agg(min(struct(col("doc_id"), col("ci"))).as("fo"))
     chunks.join(firstOcc, "ctext")
@@ -1564,8 +1555,8 @@ object Dedup {
                          textCol: String = "text"): DataFrame = {
     require(minDocs >= 2,
       s"minDocs must be >= 2 (a chunk is its own document's content): $minDocs")
-    val chunks = chunkTiles(docs, w, idCol, textCol)
-      .persist() // two consumers: the frequency agg + the join-back
+    // two consumers: the frequency agg + the join-back
+    val chunks = Scope.hold(chunkTiles(docs, w, idCol, textCol))
     val freq = chunks.groupBy("ctext")
       .agg(countDistinct(col("doc_id")).as("nd"))
     chunks.join(freq, "ctext")
@@ -1610,8 +1601,9 @@ object Dedup {
   def cdcDedupRewrite(docs: DataFrame, avgTokens: Int = 16,
                       idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    val tiles = TextStats.cdcTiles(docs, avgTokens, idCol, textCol)
-      .persist() // two consumers: first-occurrence argmin + join-back
+    // two consumers: first-occurrence argmin + join-back
+    val tiles =
+      Scope.hold(TextStats.cdcTiles(docs, avgTokens, idCol, textCol))
     val firstOcc = tiles.groupBy("ctext")
       .agg(min(struct(col("doc_id"), col("chunk_id"))).as("fo"))
     tiles.join(firstOcc, "ctext")
@@ -1660,10 +1652,10 @@ object Dedup {
                     minShared: Int = 2, maxBucket: Int = 50,
                     idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
-    val pairs = TextStats.winnowPairsVerified(docs, k, window,
+    val pairs = Scope.hold(TextStats.winnowPairsVerified(docs, k, window,
         minShared, maxBucket, idCol, textCol)
       .filter(col("n_common_kgrams") >= 1)
-      .select("doc_a", "doc_b").persist() // spine of 3 joins below
+      .select("doc_a", "doc_b")) // spine of 3 joins below
     winnowRewriteTail(docs, pairs, k, idCol, textCol)
   }
 
@@ -1710,7 +1702,7 @@ object Dedup {
     // bounded semi-join once instead of re-scanning + re-normalizing
     // the corpus for each (r14; the frame is pair-member-sized, never
     // corpus-sized, so the cache is bounded at any scale)
-    val bToks = toks.join(bDocs, Seq("doc_id"), "left_semi").persist()
+    val bToks = Scope.hold(toks.join(bDocs, Seq("doc_id"), "left_semi"))
     // positioned k-grams of the affected (rewritten) docs only
     val bGrams = bToks
       .filter(size(col("t")) >= k)
@@ -1782,9 +1774,9 @@ object Dedup {
     */
   def sentenceDedupRewrite(docs: DataFrame, idCol: String = "doc_id",
                            textCol: String = "text"): DataFrame = {
-    val sents = TextStats.sentences(docs, idCol, textCol)
-      .select("doc_id", "sent_idx", "sentence")
-      .persist() // two consumers: first-occurrence argmin + join-back
+    // two consumers: first-occurrence argmin + join-back
+    val sents = Scope.hold(TextStats.sentences(docs, idCol, textCol)
+      .select("doc_id", "sent_idx", "sentence"))
     val firstOcc = sents.groupBy("sentence")
       .agg(min(struct(col("doc_id"), col("sent_idx"))).as("fo"))
     sents.join(firstOcc, "sentence")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Graph analytics over relationship tables — the iterative-computation
   * family (rank propagation) done Spark-first: each iteration is one
   * keyed join + one keyed aggregate, and every state-threading loop
@@ -75,36 +77,18 @@ object Graph {
 
   private[graft] def prSetup(orders: DataFrame,
                              lineitem: DataFrame): PrState = {
-    val edges = purchaseEdges(orders, lineitem).persist()
+    val edges = Scope.hold(purchaseEdges(orders, lineitem))
     // out-degree per node; undirected construction ⇒ this is also the
     // node set (no dangling nodes by construction)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-      .persist()
-    // materialize deg NOW — the one count populates BOTH caches (deg's
-    // plan scans the persisted edges), so the per-round broadcast
-    // subqueries (nAgg) and edge joins read warm blocks instead of
-    // re-deriving orders⋈lineitem concurrently per consumer (see warm)
-    warm(deg)
+    // warm deg: the one count fills BOTH caches (deg scans the held
+    // edges) for the per-round nAgg broadcasts and edge joins
+    val deg = Scope.warm(edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node"), col("deg")))
     // N stays in-plan (a 1-row broadcast), not a driver count(): the
     // teleport constant is derived where it is used
     val nAgg = deg.agg(count(lit(1)).as("n"))
     PrState(edges, deg, nAgg)
   }
-
-  /** Release the cached blocks behind a SUPERSEDED
-    * `localCheckpoint(eager)` frame: an eager local checkpoint
-    * truncates lineage to cached RDD blocks, and `Dataset.unpersist()`
-    * does not reach them (they are not in the CacheManager), so a loop
-    * otherwise keeps every round's frame resident until session
-    * cleanup. Callers: [[iterate]] and [[hits]], which own the release
-    * order. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** The one round driver of the iterative family: checkpoint `init`,
     * then run `step(state, round)` for rounds 1..`maxRounds`, each
@@ -131,30 +115,18 @@ object Graph {
       step: (DataFrame, Int) => DataFrame)(
       stop: (DataFrame, DataFrame) => Boolean = (_, _) => false)
   : (DataFrame, Int) = {
-    var state = init.localCheckpoint(true)
+    var state = Scope.checkpoint(init)
     var rounds = 0
     var done = false
     while (!done && rounds < maxRounds) {
       rounds += 1
-      val next = step(state, rounds).localCheckpoint(true)
+      val next = Scope.checkpoint(step(state, rounds))
       done = stop(state, next)
-      releaseCheckpoint(state)
+      Scope.release(state)
       state = next
     }
     (state, rounds)
   }
-
-  /** Force a persisted frame to materialize NOW (one cheap count).
-    * A lazily-persisted frame that several plan branches reference —
-    * broadcast-exchange subtrees, union arms, per-round joins — is
-    * otherwise recomputed FROM BASE TABLES by every concurrent consumer
-    * racing the cold cache (broadcast exchanges run on their own thread
-    * pool, so "one action evaluates a linear chain once" does not hold
-    * for them). Measured r13: rel_label_prop 23 s wall / 157 s summed
-    * job time, rel_modularity 18 s / 105 s before this + the per-round
-    * checkpoint discipline — the round-12 hits fix (109→5 s)
-    * generalized to the whole iterative family. */
-  private[graft] def warm(df: DataFrame): DataFrame = { df.count(); df }
 
   /** (node_type, key, values…) from a namespaced `node` column
     * (customer → 2k, supplier → 2k+1). */
@@ -211,10 +183,10 @@ object Graph {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
     val m = Graph.TotalMass
-    val e0 = warm(orders
+    val e0 = Scope.warm(orders
       .join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .distinct().persist()) // 2 consumers/round + the nC broadcast
+      .distinct()) // 2 consumers/round + the nC broadcast
     val nC = e0.select("c").distinct().agg(count(lit(1)).as("nc"))
     // each round's frame feeds TWO consumers (the 1-row Σ for the
     // rescale AND the next join) and the next round builds on it —
@@ -223,33 +195,29 @@ object Graph {
     // fix). Eager localCheckpoint per round (the pageRankConverged
     // pattern) materializes each score table once and truncates
     // lineage; superseded checkpoints are released (round-8 ADVICE).
-    var h = e0.select("c").distinct()
+    var h = Scope.checkpoint(e0.select("c").distinct()
       .crossJoin(broadcast(nC))
-      .select(col("c"), expr(s"$m div nc").as("h"))
-      .localCheckpoint(true)
+      .select(col("c"), expr(s"$m div nc").as("h")))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
       val aRaw = e0.join(h, "c").groupBy("s").agg(sum("h").as("ar"))
       val sa = aRaw.agg(sum("ar").as("sa"))
-      val aNext = aRaw.crossJoin(broadcast(sa))
+      val aNext = Scope.checkpoint(aRaw.crossJoin(broadcast(sa))
         .select(col("s"),
-          expr(s"ar div greatest(sa div $m, 1)").as("a"))
-        .localCheckpoint(true)
-      if (a != null) Graph.releaseCheckpoint(a)
+          expr(s"ar div greatest(sa div $m, 1)").as("a")))
+      if (a != null) Scope.release(a)
       a = aNext
       val hRaw = e0.join(a, "s").groupBy("c").agg(sum("a").as("hr"))
       val sh = hRaw.agg(sum("hr").as("sh"))
-      val hNext = hRaw.crossJoin(broadcast(sh))
+      val hNext = Scope.checkpoint(hRaw.crossJoin(broadcast(sh))
         .select(col("c"),
-          expr(s"hr div greatest(sh div $m, 1)").as("h"))
-        .localCheckpoint(true)
-      Graph.releaseCheckpoint(h)
+          expr(s"hr div greatest(sh div $m, 1)").as("h")))
+      Scope.release(h)
       h = hNext
     }
-    // the returned frames are eager checkpoints — their lineage no
-    // longer references e0, so its cache can drop here (ADVICE r12,
-    // the lrWeights unpersist convention)
-    e0.unpersist()
+    // the returned checkpoints outlive the call, and their lineage no
+    // longer references e0: release it early
+    Scope.release(e0)
     h.select(lit("customer").as("node_type"), col("c").as("key"),
         col("h").as("score"))
       .unionByName(a.select(lit("supplier").as("node_type"),
@@ -280,10 +248,10 @@ object Graph {
     val thrAgg = st.edges.agg(count(lit(1)).as("ne"))
       .crossJoin(broadcast(st.deg.agg(count(lit(1)).as("nn"))))
       .select(expr("3 * (ne div nn)").as("thr"))
-    val degS = warm(st.deg.crossJoin(broadcast(thrAgg))
+    // per-round consumer + nsAgg broadcast: warm it once
+    val degS = Scope.warm(st.deg.crossJoin(broadcast(thrAgg))
       .select(col("node"), col("deg"),
-        (col("deg") >= col("thr")).cast("long").as("is_src"))
-      .persist()) // per-round consumer + nsAgg broadcast: warm it once
+        (col("deg") >= col("thr")).cast("long").as("is_src")))
     val nsAgg = degS.agg(sum("is_src").as("ns"))
     val tele = Graph.TotalMass * 15 / 100
     def step(ranks: DataFrame, round: Int): DataFrame = {
@@ -388,7 +356,7 @@ object Graph {
                         iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
-    val edges = warm(edges0.persist()) // per-round join + seed source
+    val edges = Scope.warm(edges0) // per-round join + seed source
     val (labels, _) = iterate(labels0, iters)(minLabelRound(edges))()
     labels.select("node", "lbl")
   }
@@ -406,7 +374,7 @@ object Graph {
   def minLabelFixpoint(labels0: DataFrame, edges0: DataFrame,
                        maxIters: Int = 60): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters: $maxIters")
-    val edges = edges0.persist()
+    val edges = Scope.hold(edges0)
     val (labels, rounds) = iterate(labels0, maxIters)(
       minLabelRound(edges)) { (_, next) =>
       next.filter(col("lbl") =!= col("prev")).isEmpty
@@ -439,29 +407,26 @@ object Graph {
     */
   def triangleCounts(pairs: DataFrame): DataFrame = {
     // e feeds deg (twice, via broadcast subtrees) and the orientation
-    // join — warm it once so the upstream pair generator (the fuzzy-
-    // match graph for rel_triangles) is not recomputed per consumer
-    val e = warm(pairs.select(col("key_a").as("a"), col("key_b").as("b"))
-      .persist())
+    // join; warm, so rel_triangles' fuzzy-match pair generator runs once
+    val e = Scope.warm(pairs.select(col("key_a").as("a"),
+      col("key_b").as("b")))
     // two consumers (the da/db attach joins, typically broadcast
     // sides) — warm so the degree agg runs once (r13)
-    val deg = warm(e.select(col("a").as("n"))
+    val deg = Scope.warm(e.select(col("a").as("n"))
       .unionAll(e.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .persist())
+      .groupBy("n").agg(count(lit(1)).as("d")))
     // orient low (d, id) -> high (d, id); carry the dst's degree for
     // the wedge ordering below
     val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = e
+    // three consumers: e1, e2, the closing-edge join
+    val oriented = Scope.warm(e
       .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
       .select(
         when(fwd, col("a")).otherwise(col("b")).as("src"),
         when(fwd, col("b")).otherwise(col("a")).as("dst"),
-        when(fwd, col("db")).otherwise(col("da")).as("dd"))
-      .persist()
-    warm(oriented) // three consumers: e1, e2, the closing-edge join
+        when(fwd, col("db")).otherwise(col("da")).as("dd")))
     // wedges rooted at src: out-neighbor pairs ordered by (dd, dst) —
     // the same order the orientation used, so the closing edge of a
     // true triangle is stored exactly as x -> y
@@ -473,11 +438,10 @@ object Graph {
       .filter(col("dx") < col("dy") ||
         (col("dx") === col("dy") && col("x") < col("y")))
       .select(col("src").as("w"), col("x"), col("y"))
-    val tri = wedges
+    // the three union arms below each scan it concurrently
+    val tri = Scope.warm(wedges
       .join(oriented.select(col("src").as("x"), col("dst").as("y")),
-        Seq("x", "y"))
-      .persist()
-    warm(tri) // the three union arms below each scan it concurrently
+        Seq("x", "y")))
     tri.select(col("w").as("node"))
       .unionAll(tri.select(col("x").as("node")))
       .unionAll(tri.select(col("y").as("node")))
@@ -563,7 +527,7 @@ object Graph {
           coalesce(col("lbl").cast("string"), lit("NULL")),
           lit(" on node "), col("node").cast("string"))))
         .otherwise(col("lbl")).as("lbl"))
-    val edges = warm(edges0.persist()) // per-round join, warm once
+    val edges = Scope.warm(edges0) // per-round join, warm once
     // The struct argmax is the MEASURED winner (BASELINE.md LPA table,
     // interleaved same-JVM reps on the sf0.1 purchase graph): struct
     // ~9.2 s, single-BIGINT packed key ~11.6 s, packed+broadcast-labels
@@ -623,8 +587,8 @@ object Graph {
   def modularity(labels: DataFrame, edges0: DataFrame): DataFrame = {
     // three consumers each (E/in_c/d_c, sl/dl×2) — warm both so the
     // broadcast subtrees (eCnt, the label sides) scan warm cache (r13)
-    val edges = warm(edges0.persist())
-    val lbl = warm(labels.persist())
+    val edges = Scope.warm(edges0)
+    val lbl = Scope.warm(labels)
     val eCnt = edges.agg(count(lit(1)).as("e"))
     val sl = lbl.select(col("node").as("src"), col("lbl").as("sl"))
     val dl = lbl.select(col("node").as("dst"), col("lbl").as("dl"))
@@ -676,8 +640,8 @@ object Graph {
   : DataFrame = {
     require(k >= 1 && iters >= 1 && iters <= 10,
       s"k >= 1 and iters in [1, 10] (twin unrolls them): $k/$iters")
-    val e0 = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
-      .persist()
+    val e0 = Scope.hold(pairs.select(col("key_a").as("a"),
+      col("key_b").as("b")))
     val (keep, _) = peelNodes(e0, lit(k), iters)()
     coreDegrees(e0, keep)
   }
@@ -692,8 +656,8 @@ object Graph {
   def kCoreFixpoint(pairs: DataFrame, k: Int, maxIters: Int = 100)
   : (DataFrame, Int) = {
     require(k >= 1 && maxIters >= 1, s"k/maxIters: $k/$maxIters")
-    val e0 = pairs.select(col("key_a").as("a"), col("key_b").as("b"))
-      .persist()
+    val e0 = Scope.hold(pairs.select(col("key_a").as("a"),
+      col("key_b").as("b")))
     val (keep, rounds) = peelToFixpoint(e0, lit(k), maxIters)
     (coreDegrees(e0, keep), rounds)
   }
@@ -759,11 +723,11 @@ object Graph {
     * not a row-data collect); the twin replays the same division. */
   private def purchasePairs(orders: DataFrame,
                             lineitem: DataFrame): (DataFrame, Long) = {
-    val e0 = orders
+    val e0 = Scope.hold(orders
       .join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("a"),
         (col("l_suppkey") * 2 + 1).as("b"))
-      .distinct().persist()
+      .distinct())
     val k = e0.agg(count(lit(1)).as("ne"))
       .crossJoin(
         e0.select(col("a").as("n")).unionAll(e0.select(col("b").as("n")))
@@ -833,7 +797,7 @@ object Graph {
               iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
-    val edges = edges0.persist()
+    val edges = Scope.hold(edges0)
     val init = sources.select(col("node"), lit(0L).as("dist"))
     val (dist, _) = iterate(init, iters) { (dist, k) =>
       val reached = dist.filter(col("dist") === k - 1)
@@ -901,7 +865,7 @@ object Graph {
                   rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10,
       s"rounds must be in [1, 10] (twin unrolls them): $rounds")
-    val wedges = wedges0.persist()
+    val wedges = Scope.hold(wedges0)
     val init = sources.select(col("node"), lit(0L).as("dist"),
       lit(true).as("improved"))
     val (dist, _) = iterate(init, rounds) { (state, _) =>
@@ -957,17 +921,15 @@ object Graph {
   def pageRankOverEdges(wedges0: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10,
       s"iters must be in [1, 10] (twin unrolls them): $iters")
-    val wedges = wedges0.persist()
+    val wedges = Scope.hold(wedges0)
     val sw = wedges.groupBy("src").agg(sum(col("w")).as("sw"))
-    // warm shares (one count materializes wedges too) — per-round join
-    // consumer + the nAgg broadcast subtree all read warm cache (r13;
-    // see [[warm]]); shares lands hash(src)-partitioned off its join,
-    // so the per-round rank join's edge side needs no Exchange
-    val shares = warm(wedges.join(sw, "src")
+    // warm shares (one count fills wedges too) for the per-round join
+    // and the nAgg broadcast; shares lands hash(src)-partitioned off its
+    // join, so the per-round rank join's edge side needs no Exchange
+    val shares = Scope.warm(wedges.join(sw, "src")
       .select(col("src"), col("dst"),
-        expr("(w * 1000000) div sw").as("ppm"))
-      .persist())
-    val nodes = warm(sw.select(col("src").as("node")).persist())
+        expr("(w * 1000000) div sw").as("ppm")))
+    val nodes = Scope.warm(sw.select(col("src").as("node")))
     val nAgg = nodes.agg(count(lit(1)).as("n"))
     val init = nodes.crossJoin(broadcast(nAgg))
       .select(col("node"), expr(s"$TotalMass div n").as("rank"))
@@ -1007,7 +969,7 @@ object Graph {
     * Output: (node_type, key, cost). */
   def purchaseHubCost(orders: DataFrame, lineitem: DataFrame,
                       rounds: Int = 3): DataFrame = {
-    val wedges = purchaseWeightedEdges(orders, lineitem).persist()
+    val wedges = Scope.hold(purchaseWeightedEdges(orders, lineitem))
     decodeNode(ssspBounded(hubSources(wedges), wedges, rounds),
       col("dist").as("cost"))
   }
@@ -1038,11 +1000,10 @@ object Graph {
     */
   def adamicAdar(orders: DataFrame, lineitem: DataFrame,
                  maxDeg: Long = 200L, k: Int = 20): DataFrame = {
-    val e = orders
+    val e = Scope.hold(orders
       .join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .persist()
+      .distinct())
     val w = e.groupBy("p").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 2 && col("deg") <= maxDeg)
       .select(col("p"),
@@ -1056,7 +1017,7 @@ object Graph {
     // a-side keeps the post-expansion plan join-free. No broadcast
     // hint on w: it is |parts|-sized (data-scaled), the planner can
     // pick broadcast when it fits (the k-core lesson).
-    val ew = e.join(w, Seq("p")).persist()
+    val ew = Scope.hold(e.join(w, Seq("p")))
     ew.select(col("p"), col("c").as("a"), col("aa"))
       .join(ew.select(col("p"), col("c").as("b")), Seq("p"))
       .filter(col("a") < col("b"))
@@ -1071,7 +1032,7 @@ object Graph {
     * Output: (node_type, key, dist). */
   def purchaseHubDistance(orders: DataFrame, lineitem: DataFrame,
                           iters: Int = 3): DataFrame = {
-    val edges = purchaseEdges(orders, lineitem).persist()
+    val edges = Scope.hold(purchaseEdges(orders, lineitem))
     decodeNode(bfsHops(hubSources(edges), edges, iters), col("dist"))
   }
 
@@ -1098,22 +1059,18 @@ object Graph {
   def randomWalks(orders: DataFrame, lineitem: DataFrame,
                   steps: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val edges = purchaseEdges(orders, lineitem).persist()
-    // warm adj (one count materializes edges too) and deg: both are
-    // referenced per hop, and the per-hop join's small side plans as a
-    // broadcast whose thread would otherwise recompute the cold chain
-    // from base tables (see [[warm]]; the pageRank r13 discipline)
-    val adj = warm(edges
+    val edges = Scope.hold(purchaseEdges(orders, lineitem))
+    // warm adj (one count fills edges too) and deg: both are read per
+    // hop, the small side through a broadcast
+    val adj = Scope.warm(edges
       .withColumn("rk",
-        row_number().over(Window.partitionBy("src").orderBy("dst")))
-      .persist())
-    val deg = warm(edges.groupBy("src").agg(count(lit(1)).as("odeg"))
-      .persist())
+        row_number().over(Window.partitionBy("src").orderBy("dst"))))
+    val deg = Scope.warm(edges.groupBy("src").agg(count(lit(1)).as("odeg")))
     // eager per-hop checkpoints: each hop frame is read twice (next
     // hop's rank join + its union arm), so materialize it once; the
     // union then scans `steps`+1 flat in-memory frames
-    var cur = deg.select(col("src").as("start"), col("src").as("node"))
-      .localCheckpoint(true)
+    var cur = Scope.checkpoint(deg.select(col("src").as("start"),
+      col("src").as("node")))
     val frames = scala.collection.mutable.ArrayBuffer(
       cur.select(col("start"), lit(0).as("step"), col("node")))
     for (s <- 1 to steps) {
@@ -1125,11 +1082,10 @@ object Graph {
           (Sampling.hashValue(
             concat(col("start").cast("string"), lit("|"), lit(s.toString)),
             "graft-walk") % col("odeg") + 1).as("_rk"))
-      cur = ranked
+      cur = Scope.checkpoint(ranked
         .join(adj, ranked("node") === adj("src")
           && ranked("_rk") === adj("rk"))
-        .select(col("start"), col("dst").as("node"))
-        .localCheckpoint(true)
+        .select(col("start"), col("dst").as("node")))
       frames += cur.select(col("start"), lit(s).as("step"), col("node"))
     }
     frames.reduce(_ unionAll _)
@@ -1149,7 +1105,7 @@ object Graph {
                     steps: Int = 4, window: Int = 2): DataFrame = {
     // the self-join reads the walk corpus twice — materialize it once
     // (flat (start, step, node) rows, |V|·(steps+1)-bounded)
-    val walks = randomWalks(orders, lineitem, steps).localCheckpoint(true)
+    val walks = Scope.checkpoint(randomWalks(orders, lineitem, steps))
     val a = walks.select(col("start"), col("step"),
       col("node").as("center"))
     val b = walks.select(col("start").as("bstart"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Relational coverage over the TPC-H-ish testdata tables: aggregation,
   * multi-way joins, window functions, rollup, and event analytics.
   *
@@ -761,10 +763,9 @@ object Relational {
     * Output: (decile, n_customers, revenue, share_bp).
     */
   def revenueDeciles(orders: DataFrame): DataFrame = {
-    val perCust = orders
+    val perCust = Scope.hold(orders
       .select(col("o_custkey"), dec(col("o_totalprice")).as("p"))
-      .groupBy("o_custkey").agg(sum(col("p")).as("spend"))
-      .persist()
+      .groupBy("o_custkey").agg(sum(col("p")).as("spend")))
     val tot = perCust.agg(sum(col("spend")).as("total"))
     // r14 (VERDICT-r13 item 5): ntile over the |customers|-sized
     // global window → two-pass range-partitioned rank + ntile's
@@ -1045,9 +1046,8 @@ object Relational {
     val daily = dailyCounts(events)
     // bounds off the pre-spine table (same min/max by construction);
     // the spine cache stays live in the returned plan — its two
-    // consumers (preds + actuals) are both downstream, so the
-    // Housekeeping.release drain is the documented lifecycle
-    val spine = spineFromDaily(daily).persist()
+    // consumers (preds + actuals) are both downstream
+    val spine = Scope.hold(spineFromDaily(daily))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))
     val base = spine.crossJoin(broadcast(bounds))
     val preds = base
@@ -1150,9 +1150,8 @@ object Relational {
     require(alphaNum >= 0 && alphaDen >= 1 && alphaNum < alphaDen,
       s"need 0 <= alpha < 1 as a fraction: $alphaNum/$alphaDen")
     // the spine cache stays live in the returned plan — residuals and
-    // the test audit both consume it (the seasonalBacktest lifecycle;
-    // Housekeeping.release drains post-query)
-    val spine = spineFromDaily(daily).persist()
+    // the test audit both consume it (the seasonalBacktest lifecycle)
+    val spine = Scope.hold(spineFromDaily(daily))
     val bounds = daily.agg(max("day").as("d1"))
     val base = spine.crossJoin(broadcast(bounds))
     // ŷ(t) = y(t − period), joined onto actuals over BOTH windows
@@ -1395,8 +1394,8 @@ object Relational {
   def periodDetect(events: DataFrame, maxLag: Int = 14): DataFrame = {
     require(maxLag >= 2, s"need maxLag >= 2: $maxLag")
     val spark = events.sparkSession
-    val spine = spineFromDaily(dailyCounts(events))
-      .persist() // base + shifted arms of the lag join
+    // base + shifted arms of the lag join
+    val spine = Scope.hold(spineFromDaily(dailyCounts(events)))
     val lags = spark.range(2, maxLag + 1)
       .select(col("id").as("lag"))
     val shifted = spine.crossJoin(broadcast(lags))
@@ -1529,8 +1528,8 @@ object Relational {
       col("event_type"),
       graft.functions.Fns.round2(col("value")).as("score"))
     // per-(score, class) counts — the only data-sized aggregate
-    val g = scored.groupBy("score", "event_type")
-      .agg(count(lit(1)).as("cnt_sc")).persist()
+    val g = Scope.hold(scored.groupBy("score", "event_type")
+      .agg(count(lit(1)).as("cnt_sc")))
     // score histogram + cumulative count of strictly-smaller scores:
     // window over DISTINCT scores only (bounded), never over rows
     val hist = g.groupBy("score").agg(sum("cnt_sc").as("cnt_s"))
@@ -1839,8 +1838,8 @@ object Relational {
     // persisted: the diff feeds BOTH splice branches — without the
     // cache each branch re-fingerprints both snapshots (the
     // ExplainAudit round-8 finding: two extra full scans per branch);
-    // |days|-sized, reclaimed by Housekeeping.release post-query
-    val diff = partitionDiff(oldDf, newDf, fpCols(rowCols)).persist()
+    // |days|-sized
+    val diff = Scope.hold(partitionDiff(oldDf, newDf, fpCols(rowCols)))
     val unchanged = diff.filter(col("status") === "unchanged")
       .select("day")
     val dirty = diff.filter(col("status").isin("added", "changed"))
@@ -1915,9 +1914,9 @@ object Relational {
       "newDir must differ from oldDir (overwrite-while-read)")
     val spark = newDf.sparkSession
     // persisted: feeds the artifact write AND the diff (|days|-sized)
-    val newFps = dayFingerprints(newDf, fpCols(rowCols)).persist()
-    val diff = diffFingerprints(
-      spark.read.parquet(s"$oldDir/fingerprints"), newFps).persist()
+    val newFps = Scope.hold(dayFingerprints(newDf, fpCols(rowCols)))
+    val diff = Scope.hold(diffFingerprints(
+      spark.read.parquet(s"$oldDir/fingerprints"), newFps))
     val unchanged = diff.filter(col("status") === "unchanged")
       .select("day")
     val dirty = diff.filter(col("status").isin("added", "changed"))
@@ -1991,11 +1990,10 @@ object Relational {
     */
   def ewmaDailyRevenue(orders: DataFrame): DataFrame = {
     val horizon = 7
-    val daily = orders
+    val daily = Scope.hold(orders
       .select(to_date(col("o_orderdate")).as("d"),
         dec(col("o_totalprice")).as("p"))
-      .groupBy("d").agg((sum(col("p")) * 100).cast("long").as("cents"))
-      .persist()
+      .groupBy("d").agg((sum(col("p")) * 100).cast("long").as("cents")))
     val contrib = daily
       .select(col("d"), col("cents"),
         explode(sequence(lit(0), lit(horizon))).as("k"))
@@ -2321,13 +2319,13 @@ object Relational {
   def markovScore(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("us").asc, col("event_id").asc)
-    val seq0 = events
+    // two consumers: the model fit + the scoring join
+    val seq0 = Scope.hold(events
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_micros(ts)").as("us"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
-      .select("user_id", "event_type", "next_type")
-      .persist() // two consumers: the model fit + the scoring join
+      .select("user_id", "event_type", "next_type"))
     val model = seq0.groupBy("event_type", "next_type")
       .agg(count(lit(1)).as("n"))
     val totals = model.groupBy("event_type").agg(sum(col("n")).as("tot"))

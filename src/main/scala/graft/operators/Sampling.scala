@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Deterministic, hash-based sampling for a large-scale training-data
   * pipeline. Random sampling (`df.sample`) is non-reproducible across
   * runs, partitionings, and engines; hash sampling decides per ROW from
@@ -38,19 +40,18 @@ object Sampling {
     * is TOTAL (include a unique tiebreaker!), the ranks are
     * bit-identical to `row_number().over(Window.orderBy(sortCols))`
     * whatever boundaries the range sampler picks. The input is
-    * persisted for the two passes (counts + rank) — callers release
-    * via Housekeeping. Partition count follows defaultParallelism
+    * held for the two passes (counts + rank), in the caller's scope.
+    * Partition count follows defaultParallelism
     * (scale-adaptive, not a local constant).
     * Output: input columns + `rankCol`. */
   private[graft] def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
                                      rankCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val p = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
-    // persist pins the partition layout: both consumers (offset agg +
+    // the cache pins the partition layout: both consumers (offset agg +
     // rank pass) must see the SAME spark_partition_id assignment
-    val parted = df.repartitionByRange(p, sortCols: _*)
-      .withColumn("_pid", spark_partition_id()).persist()
-    parted.count() // materialize now — two racing consumers otherwise
+    val parted = Scope.warm(df.repartitionByRange(p, sortCols: _*)
+      .withColumn("_pid", spark_partition_id()))
     val offsets = parted.groupBy("_pid")
       .agg(count(lit(1)).as("_cnt"))
     val wOff = Window.orderBy(col("_pid").asc)
@@ -129,11 +130,11 @@ object Sampling {
         nullif(sum("w").cast("double"), lit(0.0))).as("mn"))
       .filter(col("mn").isNotNull)
     val byMean = Window.orderBy(col("mn").asc, col("rep").asc)
-    val ranked = means
+    // three rank lookups below
+    val ranked = Scope.hold(means
       .select(col("rep"), col("mn"),
         row_number().over(byMean).cast("long").as("r"))
-      .crossJoin(broadcast(means.agg(count(lit(1)).as("nr"))))
-      .persist() // three rank lookups below
+      .crossJoin(broadcast(means.agg(count(lit(1)).as("nr")))))
     def atQuantile(q: Double) =
       ranked.filter(col("r") ===
           (floor(lit(q) * (col("nr") - 1)) + 1).cast("long"))
@@ -660,7 +661,8 @@ object Sampling {
     val tot = s.agg(sum(col("a")).as("ta"), sum(col("w")).as("tw"))
     val ord = Window.orderBy(col("r").asc, col("source").asc)
     val pre = ord.rowsBetween(Window.unboundedPreceding, -1)
-    val lv = s.withColumn("r", col("a") / col("w"))
+    // two consumers: the k* agg and the output projection
+    val lv = Scope.hold(s.withColumn("r", col("a") / col("w"))
       .crossJoin(broadcast(tot))
       .withColumn("rn", row_number().over(ord))
       .withColumn("ap", coalesce(sum(col("a")).over(pre), lit(0.0)))
@@ -668,8 +670,7 @@ object Sampling {
       .withColumn("lam",
         (lit(budgetFrac) * col("ta") - col("ap"))
           / nullif(col("tw") - col("wp"), lit(0.0)))
-      .withColumn("sat", col("r") <= col("lam"))
-      .persist() // two consumers: the k* agg and the output projection
+      .withColumn("sat", col("r") <= col("lam")))
     // first unsaturated row pins BOTH k* and λ* — struct-min orders by
     // rn, so the lam rides along with its boundary row
     val kstar = lv.agg(
@@ -811,14 +812,14 @@ object Sampling {
     require(stats.columns.contains(floorCol),
       s"mixtureFitFloors: stats frame has no column '$floorCol' " +
         s"(columns: ${stats.columns.mkString(", ")})")
-    val s = stats.select(col(srcCol).as("source"),
+    // two consumers: the event solve + the output projection
+    val s = Scope.hold(stats.select(col(srcCol).as("source"),
         col(availCol).cast("double").as("a"),
         col(wCol).cast("double").as("w"),
         greatest(lit(0.0),
           coalesce(col(floorCol).cast("double"), lit(0.0))).as("f"))
       .filter(col("w") > 0 && col("a").isNotNull)
-      .withColumn("lo", least(col("f"), col("a")))
-      .persist() // two consumers: the event solve + the output projection
+      .withColumn("lo", least(col("f"), col("a"))))
     val tot = s.agg(sum(col("a")).as("ta"), sum(col("w")).as("tw"),
       sum(col("lo")).as("tl"))
     // the two event classes; ty orders a source's leave-floor event
@@ -1030,11 +1031,10 @@ object Sampling {
     val wcum = Window.orderBy(col("_s").desc)
     // both arms join against the histogram — persist the (tiny,
     // score-cardinality-sized) subtree so the corpus agg runs once
-    val hist = df.filter(col(keyCol).isNotNull)
+    val hist = Scope.hold(df.filter(col(keyCol).isNotNull)
       .groupBy(col(scoreCol).as("_s"))
       .agg(sum(col(tokensCol)).as("_t"))
-      .withColumn("_below", sum("_t").over(wcum) - col("_t"))
-      .persist()
+      .withColumn("_below", sum("_t").over(wcum) - col("_t")))
     val keyed = df.filter(col(keyCol).isNotNull)
       .join(broadcast(hist), col(scoreCol) === col("_s"))
     val whole = keyed.filter(col("_below") + col("_t") <= budget)
@@ -1156,17 +1156,15 @@ object Sampling {
     * bag: raw + target bucket counts in ONE keyed pass (target slice
     * via conditional sum — no second scan), add-one smoothing, each
     * ratio = four ln() calls on exactly-representable doubles floored
-    * ONCE to the 1e-9 grid. `cnt` is persisted (two consumers: the
-    * totals row and the ratio projection) — bucket-sized, drained by
-    * Housekeeping.release. */
+    * ONCE to the 1e-9 grid. `cnt` is held (two consumers: the totals
+    * row and the ratio projection) — bucket-sized. */
   private def dsirLogRatiosOn(feats: DataFrame,
                               targetLang: String): DataFrame = {
     val dims = DsirBuckets
-    val cnt = feats.groupBy("b")
+    val cnt = Scope.hold(feats.groupBy("b")
       .agg(count(lit(1)).as("rc"),
         sum(when(col("lang") === targetLang, 1L).otherwise(0L))
-          .as("tc"))
-      .persist()
+          .as("tc")))
     val tot = cnt.agg(sum("rc").as("rtot"), sum("tc").as("ttot"))
     cnt.crossJoin(broadcast(tot))
       .select(col("b"),
@@ -1190,9 +1188,8 @@ object Sampling {
                  langCol: String = "lang"): DataFrame = {
     // one tokenize pass; cached because the bucket-count aggregation
     // and the per-doc scoring sum both consume it and the output plan
-    // depends on the cache (the cdcDedupRewrite convention —
-    // Housekeeping.release drains post-query)
-    val feats = dsirFeats(docs, idCol, textCol, langCol).persist()
+    // depends on the cache (the cdcDedupRewrite convention)
+    val feats = Scope.hold(dsirFeats(docs, idCol, textCol, langCol))
     dsirScoreOn(feats, dsirLogRatiosOn(feats, targetLang))
       .orderBy(col("logw_q").desc, col("doc_id").asc)
       .limit(k)
@@ -1244,14 +1241,13 @@ object Sampling {
     val dims = DsirBuckets
     // raw-side feats feed both the bucket counts and the scoring sum
     // (the dsirSelect cache convention)
-    val rf = dsirFeats(corpus, idCol, textCol, langCol).persist()
+    val rf = Scope.hold(dsirFeats(corpus, idCol, textCol, langCol))
     val rc = rf.groupBy("b").agg(count(lit(1)).as("rc"))
     val tc = dsirFeats(target, idCol, textCol, langCol)
       .groupBy("b").agg(count(lit(1)).as("tc"))
-    val cnt = rc.join(tc, Seq("b"), "full_outer")
+    val cnt = Scope.hold(rc.join(tc, Seq("b"), "full_outer")
       .select(col("b"), coalesce(col("rc"), lit(0L)).as("rc"),
-        coalesce(col("tc"), lit(0L)).as("tc"))
-      .persist()
+        coalesce(col("tc"), lit(0L)).as("tc")))
     val tot = cnt.agg(sum("rc").as("rtot"), sum("tc").as("ttot"))
     val lr = cnt.crossJoin(broadcast(tot))
       .select(col("b"),
@@ -1284,7 +1280,7 @@ object Sampling {
                    k: Int = 200, idCol: String = "doc_id",
                    textCol: String = "text", langCol: String = "lang",
                    salt: String = "graft-dsir-g"): DataFrame = {
-    val feats = dsirFeats(docs, idCol, textCol, langCol).persist()
+    val feats = Scope.hold(dsirFeats(docs, idCol, textCol, langCol))
     // u strictly inside (0, 1): h + 0.5 can reach neither 0 nor 2^32,
     // so −ln(−ln u) never hits ±∞ (u = 1 would — the (h+1)/2^32 form
     // of the E-S race is benign there but NOT under a Gumbel)

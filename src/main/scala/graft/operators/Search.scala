@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.functions.Fns._
 
 /** Full-text relevance ranking over the `documents` table — the lookup
@@ -111,16 +112,14 @@ object Search {
     * linearly-mergeable CMS/HLL artifacts). */
   def bm25IndexWrite(docs: DataFrame, dir: String,
                      idCol: String = "doc_id",
-                     textCol: String = "text"): Unit = {
+                     textCol: String = "text"): Unit = Scope.run {
     // tokens feed dl + counts; dl feeds stats + postings (invariant 9)
-    val tokens = WikiText.tokens(docs, idCol, textCol).persist()
-    val dl = tokens.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .persist()
-    val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("total"))
-      .select(col("n"), (col("total") / col("n")).as("avgdl"))
-      .persist()
-    val counts = tokens.groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("cnt")).persist()
+    val tokens = Scope.hold(WikiText.tokens(docs, idCol, textCol))
+    val dl = Scope.hold(tokens.groupBy("doc_id").agg(count(lit(1)).as("dl")))
+    val stats = Scope.hold(dl.agg(count(lit(1)).as("n"), sum("dl").as("total"))
+      .select(col("n"), (col("total") / col("n")).as("avgdl")))
+    val counts = Scope.hold(tokens.groupBy("doc_id", "word")
+      .agg(count(lit(1)).as("cnt")))
     counts.join(dl, "doc_id")
       .select("word", "doc_id", "cnt", "dl")
       .repartition(col("word"))
@@ -131,7 +130,6 @@ object Search {
       .select(col("word"), col("dfreq"), idfExpr.as("idf"))
       .write.mode("overwrite").parquet(s"$dir/wordstats")
     stats.write.mode("overwrite").parquet(s"$dir/stats")
-    Seq(tokens, dl, stats, counts).foreach(_.unpersist())
   }
 
   /** Serve BM25 top-k from a persisted [[bm25IndexWrite]] artifact —

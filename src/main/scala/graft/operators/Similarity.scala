@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.functions.VecExpressions
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -118,23 +119,22 @@ object Similarity {
     val c = withNorm(candidates, idCol, vecCol)
     val byRel = w.partitionBy("query_id")
       .orderBy(col("rel").desc, col("vec_id").asc)
-    val cand = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val cand = Scope.hold(c
+      .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("vec"), col("norm"),
         (dot(col("qvec"), col("vec"))
           / nullif(col("qnorm") * col("norm"), lit(0.0))).as("rel"))
       .filter(col("rel").isNotNull)
       .withColumn("rn", row_number().over(byRel))
-      .filter(col("rn") <= nCand).drop("rn")
-      .persist()
+      .filter(col("rn") <= nCand).drop("rn"))
     // candidate×candidate cosine matrix, per query (≤ nCand² rows each)
     val a = cand.select(col("query_id"), col("vec_id").as("d"),
       col("vec").as("dv"), col("norm").as("dn"))
     val b = cand.select(col("query_id"), col("vec_id").as("s"),
       col("vec").as("sv"), col("norm").as("sn"))
-    val ps = a.join(b, Seq("query_id")).filter(col("d") =!= col("s"))
+    val ps = Scope.hold(a.join(b, Seq("query_id")).filter(col("d") =!= col("s"))
       .select(col("query_id"), col("d"), col("s"),
-        (dot(col("dv"), col("sv")) / (col("dn") * col("sn"))).as("sim"))
-      .persist()
+        (dot(col("dv"), col("sv")) / (col("dn") * col("sn"))).as("sim")))
     val slim = cand.select(col("query_id"), col("vec_id"), col("rel"))
     var selected = slim
       .withColumn("rn", row_number().over(byRel)).filter(col("rn") === 1)
@@ -162,9 +162,9 @@ object Similarity {
       // single final materialization — eagerly unpersisting superseded
       // frames re-measured sim_mmr at 1.4-1.5× (round-8 bench). The
       // bounded k+1 cached plans (≤ nCand rows per query each) are
-      // reclaimed by the session-level Housekeeping.release after the
-      // caller materializes the result (ADVICE r7 adjudication).
-      selected = selected.unionAll(pick).persist()
+      // released with the caller's scope, after it materializes the
+      // result (ADVICE r7 adjudication).
+      selected = Scope.hold(selected.unionAll(pick))
       remaining =
         remaining.join(selected, Seq("query_id", "vec_id"), "left_anti")
     }
@@ -275,28 +275,24 @@ object Similarity {
       if (maxDfFrac >= 1.0) tfidf
       else {
         // the weight subtree feeds BOTH the df agg and the anti-join —
-        // persist it or the whole TF-IDF pipeline runs twice (house
-        // invariant 9; Housekeeping.release unpins post-query)
-        val t = tfidf.persist()
+        // hold it or the whole TF-IDF pipeline runs twice (house
+        // invariant 9)
+        val t = Scope.hold(tfidf)
         val n = docs.count()
         val hot = t.groupBy("word").agg(count(lit(1)).as("df"))
           .filter(col("df") > lit(maxDfFrac * n))
           .select("word")
         t.join(broadcast(hot), Seq("word"), "left_anti")
       }
-    // weights are consumed three times (norms + both join sides) —
-    // materialize NOW: the query-side broadcast build below runs on
-    // its own thread and would otherwise race the main plan through
-    // the whole TF-IDF pipeline cold (the Graph.warm device, r14)
-    val vecs = pruned.select(col("doc_id"), col("word"),
-      col("tf_idf").as("w")).persist()
-    vecs.count()
+    // weights are consumed three times (norms + both join sides), the
+    // query side through a broadcast build — warm (r14)
+    val vecs = Scope.warm(pruned.select(col("doc_id"), col("word"),
+      col("tf_idf").as("w")))
     // the norm table joins the scored pairs TWICE (na/nb) — persist or
     // the doc-keyed aggregation over the full weight table runs twice
-    val norms = vecs.groupBy("doc_id")
+    val norms = Scope.hold(vecs.groupBy("doc_id")
       .agg(sqrt(sum((col("w") * col("w")).cast(dec)).cast("double"))
-        .as("norm"))
-      .persist()
+        .as("norm")))
     val qs = queryIds.select(col(idCol).as("doc_id")).distinct()
     val a = vecs.join(broadcast(qs), "doc_id")
       .select(col("doc_id").as("doc_a"), col("word"), col("w").as("wa"))
@@ -356,10 +352,9 @@ object Similarity {
     // ahead of the action. norms still persists: it joins the scored
     // pairs twice, and a second full-vecs aggregation is a pure loss
     // at any scale
-    val vecs = buckets.select(col("doc_id"), col("j"), col("w")).persist()
-    val norms = vecs.groupBy("doc_id")
-      .agg(sum(col("w") * col("w")).as("nsq"))
-      .persist()
+    val vecs = Scope.hold(buckets.select(col("doc_id"), col("j"), col("w")))
+    val norms = Scope.hold(vecs.groupBy("doc_id")
+      .agg(sum(col("w") * col("w")).as("nsq")))
     val qs = queryIds.select(col("doc_id")).distinct()
     val a = vecs.join(broadcast(qs), "doc_id")
       .select(col("doc_id").as("doc_a"), col("j"), col("w").as("wa"))
@@ -671,13 +666,13 @@ object Similarity {
     */
   def trainCodebook(emb: DataFrame, k: Int = 16, iters: Int = 5,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
+                    vecCol: String = "embedding"): DataFrame = Scope.run {
+    // the codebook leaves as local rows, so the unit vectors die here
     val spark = emb.sparkSession
-    val n = withNorm(emb, idCol, vecCol).filter(col("norm") > 0)
+    val n = Scope.hold(withNorm(emb, idCol, vecCol).filter(col("norm") > 0)
       .select(col("vec_id"),
         transform(col("vec"), x => (x.cast("double") / col("norm")))
-          .as("unit"))
-      .persist()
+          .as("unit")))
     var code: Array[Seq[Double]] = n.orderBy(col("vec_id").asc).limit(k)
       .collect().map(_.getSeq[Double](1))
     // fewer non-zero vectors than requested centroids: train with what
@@ -716,7 +711,6 @@ object Similarity {
         }
       }
     }
-    n.unpersist()
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
       code.zipWithIndex.map { case (c, i) =>
@@ -832,18 +826,17 @@ object Similarity {
     * own parameters. */
   def pqIndexWrite(candidates: DataFrame, dir: String, m: Int = 8,
                    ksub: Int = 16, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Unit = {
+                   vecCol: String = "embedding"): Unit = Scope.run {
     requireIntegralIds(candidates, idCol, "pqIndexWrite")
     VecExpressions.register(candidates.sparkSession)
     val dsub = pqDims(candidates, m, vecCol, "pqIndexWrite") / m
-    val cent = pqCent(candidates, ksub, m, dsub, idCol, vecCol)
-      .persist() // two consumers: the artifact write + the encoding
+    // two consumers: the artifact write + the encoding
+    val cent = Scope.hold(pqCent(candidates, ksub, m, dsub, idCol, vecCol))
     cent.write.mode("overwrite").parquet(s"$dir/codebook")
     pqCodes(candidates, cent, m, dsub, idCol, vecCol)
       .write.mode("overwrite").parquet(s"$dir/codes")
     candidates.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
       .write.mode("overwrite").parquet(s"$dir/vectors")
-    cent.unpersist()
   }
 
   /** Serve PQ ANN top-k from a persisted [[pqIndexWrite]] artifact —
@@ -956,15 +949,14 @@ object Similarity {
     // two consumers each (residuals+membership / codebook+codes) —
     // persist or the coarse assignment and the TF of the residual
     // subtree recompute (house invariant 9)
-    val assigned = assigned0.persist()
+    val assigned = Scope.hold(assigned0)
     val cvec = coarse.select(col("ccid").as("cid"), col("ccvec"))
-    val resid = candidates
+    val resid = Scope.hold(candidates
       .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
       .join(assigned, "vec_id")
       .join(broadcast(cvec), "cid")
       .select(col("vec_id"), col("cid"),
-        zip_with(col("vec"), col("ccvec"), (x, c) => x - c).as("rvec"))
-      .persist()
+        zip_with(col("vec"), col("ccvec"), (x, c) => x - c).as("rvec")))
     // per-list codebook membership: the ksub lowest-id members of each
     // list via the bounded heap (score = -id keeps smallest ids; exact
     // for ids < 2^53); j = position in the (id asc) sorted output
@@ -1282,11 +1274,9 @@ object Similarity {
     * to surviving pairs only — O(edges), not O(candidates). */
   private def mutualCosTail(knn0: DataFrame, emb: DataFrame,
                             idCol: String, vecCol: String): DataFrame = {
-    // warm: the semi-join's build side would otherwise recompute the
-    // whole blocking/ranking chain on the broadcast-exchange thread
-    // against a cold cache (the Graph.warm r13 discipline)
-    val knn = Graph.warm(
-      knn0.select(col("query_id"), col("neighbor_id")).persist())
+    // warm: the semi-join's build side is a broadcast (r13)
+    val knn = Scope.warm(
+      knn0.select(col("query_id"), col("neighbor_id")))
     val mutual = knn
       .join(knn.select(col("neighbor_id").as("query_id"),
         col("query_id").as("neighbor_id")),
@@ -1372,18 +1362,18 @@ object Similarity {
     require(probes.nonEmpty && probes.head >= 1,
       s"candidateProbes must be >= 1: $candidateProbes")
     val queries = emb.filter(col(idCol) % queryMod === 0)
-    val exact = bruteTopK(queries, emb, k)
-      .select("query_id", "neighbor_id")
-      .persist() // two consumers: hit overlap + query-count scalar
+    // two consumers: hit overlap + query-count scalar
+    val exact = Scope.hold(bruteTopK(queries, emb, k)
+      .select("query_id", "neighbor_id"))
     val cand = withNorm(emb, idCol, vecCol).filter(col("norm") > 0)
     val cent = ivfCentroids(cand, nCentroids, None)
-    val swept = ivfScoredRanked(
+    // two consumers: scanned-cost agg + top-k re-rank
+    val swept = Scope.hold(ivfScoredRanked(
         withNorm(queries, idCol, vecCol).filter(col("norm") > 0),
         cent, ivfAssign(cand, cent), probes.last)
       .select(col("query_id"), col("vec_id"), col("cos"), col("prank"),
         explode(array(probes.map(p => lit(p.toLong)): _*)).as("n_probe"))
-      .filter(col("prank") <= col("n_probe"))
-      .persist() // two consumers: scanned-cost agg + top-k re-rank
+      .filter(col("prank") <= col("n_probe")))
     val scanned = swept.groupBy("n_probe")
       .agg(count(lit(1)).as("n_scanned"))
     val w = Window.partitionBy("n_probe", "query_id")
@@ -1397,7 +1387,8 @@ object Similarity {
     val nq = exact.agg(countDistinct(col("query_id")).as("n_queries"))
     val spine = nq.select(col("n_queries"),
       explode(array(probes.map(p => lit(p.toLong)): _*)).as("n_probe"))
-    val frontier = spine
+    // two consumers: the chosen-point scalar + output
+    val frontier = Scope.hold(spine
       .join(scanned, Seq("n_probe"), "left")
       .join(hits, Seq("n_probe"), "left")
       .select(col("n_probe"),
@@ -1405,8 +1396,7 @@ object Similarity {
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         col("n_queries"),
         graft.functions.Fns.round2(coalesce(col("n_hits"), lit(0L))
-          / (lit(k) * col("n_queries"))).as("mean_recall"))
-      .persist() // two consumers: the chosen-point scalar + output
+          / (lit(k) * col("n_queries"))).as("mean_recall")))
     val best = frontier.agg(
       min(when(col("mean_recall") >= targetRecall, col("n_probe")))
         .as("best"))
@@ -1422,7 +1412,7 @@ object Similarity {
     * query spine + overlap). */
   private def recallTail(exact0: DataFrame, approx: DataFrame,
                          k: Int): DataFrame = {
-    val exact = exact0.persist()
+    val exact = Scope.hold(exact0)
     val hits = exact
       .join(approx, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("h"))
@@ -1479,9 +1469,8 @@ object Similarity {
   private def componentsTail(mutual: DataFrame,
                              maxRounds: Int): DataFrame = {
     val mu = mutual.select("u", "v")
-    val edges = mu.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(mu.select(col("v").as("src"), col("u").as("dst")))
-      .persist()
+    val edges = Scope.hold(mu.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(mu.select(col("v").as("src"), col("u").as("dst"))))
     val labels0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     val (lbl, rounds) = Graph.minLabelFixpoint(labels0, edges, maxRounds)
@@ -1513,20 +1502,19 @@ object Similarity {
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     VecExpressions.register(emb.sparkSession)
-    val base = emb.select(col(labelCol).cast("long").as("label"),
+    // two consumers: per-label stats + the unit chain
+    val base = Scope.hold(emb.select(col(labelCol).cast("long").as("label"),
         col(idCol).as("vec_id"), col(vecCol).as("vec"),
-        l2norm(col(vecCol)).as("norm"))
-      .persist() // two consumers: per-label stats + the unit chain
+        l2norm(col(vecCol)).as("norm")))
     val stats = base.groupBy("label").agg(
       count(lit(1)).as("n_vecs"),
       sum(when(col("norm") === 0, 1L).otherwise(0L)).as("n_zero"),
       (sum(col("norm").cast("decimal(30,12)")).cast("double")
         / count(lit(1))).as("mn"))
-    val units = base.filter(col("norm") > 0)
+    val units = Scope.hold(base.filter(col("norm") > 0)
       .select(col("label"),
         transform(col("vec"), x => x.cast("double") / col("norm"))
-          .as("u"))
-      .persist() // two consumers: centroid dims + member cosines
+          .as("u"))) // two consumers: centroid dims + member cosines
     val cents = units.select(col("label"), posexplode(col("u")))
       .groupBy("label", "pos")
       .agg((sum(col("col").cast("decimal(30,12)")).cast("double")
@@ -1568,7 +1556,7 @@ object Similarity {
                        queryMod: Int = 50): DataFrame = {
     require(dims >= 1, s"dims must be >= 1: $dims")
     val queries = emb.filter(col("vec_id") % queryMod === 0)
-    val full = bruteTopK(queries, emb, k).persist()
+    val full = Scope.hold(bruteTopK(queries, emb, k))
     val trunc = bruteTopK(
       queries.withColumn("embedding", slice(col("embedding"), 1, dims)),
       emb.withColumn("embedding", slice(col("embedding"), 1, dims)), k)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token counting, quality scoring, language ID, document fingerprinting.
   * All pure `functions._` compositions (whole-stage codegen, no UDFs),
@@ -255,7 +257,7 @@ object TextStats {
         md5(normalized(text)).as("fp"),
         langExpr(text).as("lang"))
     val mult = per.groupBy("fp").agg(count(lit(1)).as("nfp"))
-    val j = per.join(mult, "fp").persist() // two rollups below
+    val j = Scope.hold(per.join(mult, "fp")) // two rollups below
     val bySrc = j.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_toks")).as("n_tokens"),
@@ -450,9 +452,8 @@ object TextStats {
                       textCol: String): DataFrame = {
     // c2 feeds BOTH c1 and the model join — persist, or the corpus-wide
     // bigram aggregation (the expensive shuffle) runs twice
-    val c2 = docBigrams(docs, idCol, textCol)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .persist()
+    val c2 = Scope.hold(docBigrams(docs, idCol, textCol)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
     // stage 2 of the salted aggregation: the (w1, w2) grouping above
     // already spread the hot w1 over its successors; summing those
     // partials by w1 is partial-aggregated again — no single-reducer
@@ -528,17 +529,17 @@ object TextStats {
   def pmiCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 100,
                       textCol: String = "text"): DataFrame = {
     val t = split(normalized(col(textCol)), " ")
-    val bigrams = docs.select(
+    // three consumers: c_ab model, B total, (via uni) N
+    val bigrams = Scope.hold(docs.select(
         explode(transform(sequence(lit(1), greatest(size(t) - 1, lit(1))),
           i => struct(get(t, i - 1).as("a"), get(t, i).as("b"))))
           .as("bg"))
       .select(col("bg.a").as("a"), col("bg.b").as("b"))
-      .filter(col("b").isNotNull) // single-token docs have no bigram
-      .persist() // three consumers: c_ab model, B total, (via uni) N
-    val uni = docs
+      .filter(col("b").isNotNull)) // single-token docs have no bigram
+    // three consumers: two model joins + the N total
+    val uni = Scope.hold(docs
       .select(explode(t).as("w")).filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist() // three consumers: two model joins + the N total
+      .groupBy("w").agg(count(lit(1)).as("c")))
     val nUni = uni.agg(sum(col("c")).cast("long").as("n_uni"))
     val nBig = bigrams.agg(count(lit(1)).as("n_big"))
     val cAb = bigrams.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
@@ -889,7 +890,7 @@ object TextStats {
                        textCol: String = "text"): DataFrame = {
     // one tokenize pass serves both the top-pair derivation and the
     // dictionary rewrite (invariant 9)
-    val wf = wordFreq(docs, textCol).persist()
+    val wf = Scope.hold(wordFreq(docs, textCol))
     val top = pairStatsFromWf(wf, k = 1).select(col("a"), col("b"))
     wf.crossJoin(broadcast(top))
       .withColumn("merged",
@@ -931,28 +932,24 @@ object TextStats {
     */
   def bpeTrain(docs: DataFrame, rounds: Int = 6,
                idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
-    val (merges, vocab) = bpeTrainLoop(docs, rounds, textCol)
-    vocab.unpersist()
-    merges
-  }
+               textCol: String = "text"): DataFrame =
+    // the merge table is local rows, so the vocabulary dies here
+    Scope.run(bpeTrainLoop(docs, rounds, textCol)._1)
 
   /** The shared trainer: returns (merge table, trained vocabulary) —
     * the vocabulary is (w, wf, repr) with repr the word's final
-    * space-joined symbol sequence, LEFT PERSISTED for the caller
-    * ([[bpeEncode]] joins it; Housekeeping.release reclaims it after
-    * the query materializes — the mmrTopK cand/ps pattern). */
+    * space-joined symbol sequence, held in the caller's scope
+    * ([[bpeEncode]] joins it — the mmrTopK cand/ps pattern). */
   private def bpeTrainLoop(docs: DataFrame, rounds: Int,
                            textCol: String): (DataFrame, DataFrame) = {
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1, 20] (twin unrolls them): $rounds")
     val spark = docs.sparkSession
-    var cur = wordFreq(docs, textCol)
+    var cur = Scope.hold(wordFreq(docs, textCol)
       .select(col("w"), col("wf"),
         array_join(filter(split(col("w"), ""), x => x =!= ""), " ")
-          .as("repr"))
-      .persist()
-    // the superseded frame is unpersisted only AFTER its successor has
+          .as("repr")))
+    // the superseded frame is released only AFTER its successor has
     // materialized (the take() below runs the round's aggregation over
     // `cur`, populating its cache) — dropping it at hand-off would
     // force the next action to recompute the whole chain from the
@@ -974,7 +971,7 @@ object TextStats {
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
         .limit(1)
         .take(1)
-      if (prev != null) { prev.unpersist(); prev = null }
+      if (prev != null) { Scope.release(prev); prev = null }
       if (top.isEmpty) dry = true
       else {
         val (a, b, cnt) =
@@ -982,21 +979,20 @@ object TextStats {
         merges += ((r.toLong, a, b, cnt))
         // leftmost non-overlapping merge fold; symbol-boundary-exact
         // because symbols are space-free (see scaladoc)
-        val next = cur.select(col("w"), col("wf"),
+        val next = Scope.hold(cur.select(col("w"), col("wf"),
           aggregate(split(col("repr"), " "), lit(""), (acc, x) =>
             when(acc === "", x)
               .when(x === lit(b) &&
                 (acc === lit(a) || acc.endsWith(lit(" " + a))),
                 concat(acc.substr(lit(1), length(acc) - lit(a.length)),
                   lit(a + b)))
-              .otherwise(concat(acc, lit(" "), x))).as("repr"))
-          .persist()
+              .otherwise(concat(acc, lit(" "), x))).as("repr")))
         prev = cur
         cur = next
         r += 1
       }
     }
-    if (prev != null) prev.unpersist()
+    if (prev != null) Scope.release(prev)
     import spark.implicits._
     (merges.toSeq.toDF("round", "a", "b", "cnt"), cur)
   }
@@ -1057,11 +1053,10 @@ object TextStats {
     * bit-identical to the in-plan one (the gate pins this). */
   def bpeArtifactWrite(docs: DataFrame, dir: String, rounds: Int = 6,
                        idCol: String = "doc_id",
-                       textCol: String = "text"): Unit = {
+                       textCol: String = "text"): Unit = Scope.run {
     val (merges, vocab) = bpeTrainLoop(docs, rounds, textCol)
     merges.write.mode("overwrite").parquet(s"$dir/merges")
     vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    vocab.unpersist()
   }
 
   /** ENCODE from a persisted [[bpeArtifactWrite]] tokenizer — the
@@ -1267,14 +1262,12 @@ object TextStats {
     // contract, not a pairing prerequisite; skipping it removes one
     // full fingerprint exchange from every winnowPairs consumer (r14,
     // guide §2.4)
-    val fps = winnow(docs, k, window, idCol, textCol,
+    // three consumers (bucket agg + both self-join sides); unwarmed,
+    // the 831 KiB fingerprint shuffle was written 4× per
+    // dedup_winnow_rewrite action (r14)
+    val fps = Scope.warm(winnow(docs, k, window, idCol, textCol,
         positionDistinct = false)
-      .select("doc_id", "fp").distinct().persist() // pair both sides
-    // three consumers (bucket agg + both self-join sides) reach fps
-    // through separate exchange subtrees and race to evaluate the
-    // winnow chain cold — force it once (r14: the 831 KiB fingerprint
-    // shuffle was written 4× per dedup_winnow_rewrite action)
-    fps.count()
+      .select("doc_id", "fp").distinct()) // pair both sides
     val buckets = fps.groupBy("fp").agg(count(lit(1)).as("bs"))
       .filter(col("bs") >= 2 && col("bs") <= maxBucket)
       .select("fp")
@@ -1302,27 +1295,22 @@ object TextStats {
                           minShared: Int = 2, maxBucket: Int = 50,
                           idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {
-    val pairs = winnowPairs(docs, k, window, minShared, maxBucket,
-      idCol, textCol).persist() // members spine + two pair joins
-    // force the pair spine NOW: the consumers below reach it through
-    // broadcast-exchange subtrees (the members semi-join build side,
-    // the final left-join probe) that otherwise race to evaluate the
-    // whole winnow chain cold — profiled r14 on dedup_winnow_rewrite:
-    // the same 831 KiB fingerprint shuffle written 5× per action
-    pairs.count()
+    // the members spine + two pair joins, two of them broadcast sides;
+    // unwarmed, dedup_winnow_rewrite wrote the same 831 KiB fingerprint
+    // shuffle 5× per action (r14)
+    val pairs = Scope.warm(winnowPairs(docs, k, window, minShared,
+      maxBucket, idCol, textCol))
     val members = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val t = split(normalized(col(textCol)), " ")
-    val grams = docs.select(col(idCol).as("doc_id"), t.as("t"))
+    // both sides of the intersection join read it — warm (r14)
+    val grams = Scope.warm(docs.select(col(idCol).as("doc_id"), t.as("t"))
       .join(members, Seq("doc_id"), "left_semi") // candidate-bounded
       .filter(size(col("t")) >= k)
       .select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
           i => concat_ws(" ", slice(col("t"), i, lit(k))))).as("g"))
-      .distinct().persist() // both sides of the intersection join
-    // same race: both sides of the intersection join reach `grams`
-    // through their own exchange subtrees — force it once (r14)
-    grams.count()
+      .distinct())
     val common = pairs
       .join(grams.select(col("doc_id").as("doc_a"), col("g")), "doc_a")
       .join(grams.select(col("doc_id").as("doc_b"), col("g")),
@@ -1450,7 +1438,10 @@ object TextStats {
                  idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     require(modP >= 2, s"modP must be >= 2: $modP")
-    val counts = docs
+    // two consumers (totals + the output join): without the hold the
+    // FULL tokenize+groupBy pass over N re-runs for the 1-row totals
+    // aggregate (invariant 9)
+    val counts = Scope.hold(docs
       .select(col(idCol).as("doc_id"),
         explode(split(normalized(col(textCol)), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -1458,11 +1449,7 @@ object TextStats {
       .agg(sum(when(col("doc_id") % modP === 0, 1L).otherwise(0L))
           .as("c_p"),
         sum(when(col("doc_id") % modP =!= 0, 1L).otherwise(0L))
-          .as("c_q"))
-      // two consumers (totals + the output join): without the persist
-      // the FULL tokenize+groupBy pass over N re-runs for the 1-row
-      // totals aggregate (invariant 9)
-      .persist()
+          .as("c_q")))
     val totals = counts.agg(sum("c_p").as("np"), sum("c_q").as("nq"),
       count(lit(1)).as("v"))
     val p = (col("c_p") + 1) / (col("np") + col("v"))

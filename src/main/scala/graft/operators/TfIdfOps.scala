@@ -117,7 +117,7 @@ object TfIdfOps {
     */
   def tfIdfPipeline(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
-    val tfT = tf(docs, idCol, textCol).persist()
+    val tfT = graft.Scope.hold(tf(docs, idCol, textCol))
     tfIdf(tfT, idf(tfT, corpusSize(docs.select(col(idCol)))))
   }
 }

@@ -84,13 +84,14 @@ object EventsStream {
     * (batch, batchId) and return once the last one is done: append
     * mode, AvailableNow, foreachBatch, on a [[scopedSession]] — the
     * driver of every staged gate that lands its own per-batch results
-    * or [[versionStep]] artifacts. */
+    * or [[versionStep]] artifacts. Each call of `f` runs in its own
+    * [[graft.Scope]], on the stream's thread. */
   private def replayStaged(spark: SparkSession, stageDir: String)(
       f: (DataFrame, Long) => Unit): Unit =
     stagedSource(scopedSession(spark), stageDir).writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(f)
+      .foreachBatch((b: DataFrame, id: Long) => graft.Scope.run(f(b, id)))
       .start()
       .awaitTermination()
 
@@ -936,7 +937,7 @@ object EventsStream {
       // negative here
       val (res0, shDelta, deltaB) =
         Dedup.incrementalMinHashFromIndexOpen(batch, idxDir)
-      // force the two persisted probe frames NOW (the Graph.warm
+      // force the two persisted probe frames NOW (the Scope.warm
       // device, r13): the verdict action's many broadcast-exchange
       // subtrees (the candidate joins, the jaccard verify, the
       // verdict left-join) otherwise race to evaluate them cold,
@@ -945,8 +946,8 @@ object EventsStream {
       // One count materializes BOTH caches — deltaB consumes every
       // shDelta row on the way (the prSetup warm-deg device)
       deltaB.count()
-      val res = res0
-        .persist() // two consumers: verdict write + survivor filter
+      // two consumers: verdict write + survivor filter
+      val res = graft.Scope.hold(res0)
       res.write.mode("overwrite").parquet(s"$resDir/b$batchId")
       // the append re-serves the probe's own shingle/band frames
       // filtered to the survivors (bit-identical per-doc functions)
@@ -954,7 +955,6 @@ object EventsStream {
       // text — round-14, guide §1.2: halves the per-batch agg work
       Dedup.dedupIndexAppendFrom(res.filter(col("keep")), shDelta,
         deltaB, idxDir)
-      res.unpersist(); shDelta.unpersist(); deltaB.unpersist()
     }
     // the per-batch dirs resDir/b<id> read as one tree: a `b*` glob path
     // sends the file source probing for a sink metadata dir under the

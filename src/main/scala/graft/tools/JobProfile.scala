@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * give. `key=value` args after the sfDir set runtime SQL confs on the
   * session first, for A/B runs of a conf. Gates that stream or write
   * artifacts run those steps while their plan is built, before it is
-  * printed.
+  * printed. `SCOPE released=<n> eager=<m>` counts the profiled run's
+  * released frames and eager holds (warms and checkpoints).
   * Usage: runMain graft.tools.JobProfile <gate> [sfDir] [key=value ...]
   */
 object JobProfile {
@@ -63,19 +64,25 @@ object JobProfile {
 
     // one untimed warm run so JIT/first-job setup doesn't pollute the
     // second run's job profile; its plan is the one printed
-    val warm = fn(spark, dir)
-    println(warm.queryExecution.explainString(FormattedMode))
-    warm.write.format("noop").mode("overwrite").save()
-    graft.Housekeeping.release(spark)
+    graft.Scope.run {
+      val warm = fn(spark, dir)
+      println(warm.queryExecution.explainString(FormattedMode))
+      warm.write.format("noop").mode("overwrite").save()
+    }
 
     spark.sparkContext.addSparkListener(listener)
+    val (released0, eager0) = graft.Scope.tally
     val t0 = System.nanoTime()
-    fn(spark, dir).write.format("noop").mode("overwrite").save()
-    val dt = (System.nanoTime() - t0) / 1e9
+    val dt = graft.Scope.run {
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
     spark.sparkContext.removeSparkListener(listener)
-    graft.Housekeeping.release(spark)
+    val (released1, eager1) = graft.Scope.tally
 
     println(f"PROFILE $name total=$dt%.2f s, jobs=${jobs.size}")
+    println(s"SCOPE released=${released1 - released0} " +
+      s"eager=${eager1 - eager0}")
     var acct = 0.0
     jobs.values.toSeq.sortBy(_.start).foreach { r =>
       val sec = math.max(0L, r.end - r.start) / 1e3

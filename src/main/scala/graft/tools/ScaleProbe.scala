@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{GraftSession, Scope}
 import graft.operators._
 
 /** Scale-behavior probe: replicates the sf0.1 documents table K× with
@@ -14,13 +14,20 @@ import graft.operators._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local("scale-probe", 32)
+    // the replicas live in the probe's scope, each op's frames in its own
+    Scope.run(probe(spark, args))
+    spark.stop()
+  }
+
+  private def probe(spark: org.apache.spark.sql.SparkSession,
+                    args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 10
     // the K× replicas are built (and cached) on first use, so a filtered
     // run pays only for the inputs its ops read
     val replicas = scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.DataFrame]()
     def replica(label: String)(df: org.apache.spark.sql.DataFrame) = {
-      val r = df.repartition(64).persist()
+      val r = Scope.hold(df.repartition(64))
       println(s"PROBE $label=${r.count()}")
       replicas += r
       r
@@ -37,14 +44,14 @@ object ScaleProbe {
     val only: Option[String] = if (args.length > 1) Some(args(1)) else None
     def time(name: String)(f: => Long): Unit = {
       if (only.exists(o => !name.contains(o))) return
+      val built = replicas.size
       val t0 = System.nanoTime()
-      val n = f
+      val n = Scope.run(f)
       println(f"PROBE $name rows=$n%d sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-      // release() drops EVERY cached frame (operator-local persists);
-      // re-cache the built replicas so the next op isn't charged for
-      // re-reading them
-      graft.Housekeeping.release(spark)
-      replicas.foreach(_.persist().count())
+      // a replica first built inside the op was held by its scope;
+      // re-cache it in the probe's own scope so the next op isn't
+      // charged for re-reading it
+      replicas.drop(built).foreach(Scope.warm)
     }
     time("q6_tfidf")(TfIdfOps.tfIdfPipeline(big).count())
     time("dedup_minhash")(Dedup.minHashLsh(big).count())
@@ -162,14 +169,12 @@ object ScaleProbe {
     time("triangles_oriented_hub10k")(
       Graph.triangleCounts(skewGraph(10000L)).count())
     def naiveTriangles(hub: Long): Long = {
-      val e = skewGraph(hub).persist()
+      val e = Scope.hold(skewGraph(hub))
       val p1 = e.select(col("key_a").as("x"), col("key_b").as("y"))
       val p2 = e.select(col("key_a").as("x"), col("key_b").as("z"))
       val p3 = e.select(col("key_a").as("y"), col("key_b").as("z"))
-      val n = p1.join(p2, "x").filter(col("y") < col("z"))
+      p1.join(p2, "x").filter(col("y") < col("z"))
         .join(p3, Seq("y", "z")).count()
-      e.unpersist()
-      n
     }
     time("triangles_naive_hub10k")(naiveTriangles(10000L))
     // C(30k,2) = 450M wedges at the hub alone — 9× hub10k's 50M; the
@@ -235,7 +240,7 @@ object ScaleProbe {
       core.count()
     }
     time("pagerank_fixpoint") {
-      val ranks = Graph.pageRankConverged(ordersSf, liSf).persist()
+      val ranks = Scope.hold(Graph.pageRankConverged(ordersSf, liSf))
       val r = ranks.select("rounds").head().getLong(0)
       println(s"PROBE pagerank_fixpoint rounds=$r")
       ranks.count()
@@ -264,6 +269,5 @@ object ScaleProbe {
         .select(Dedup.canonicalUrl(col("url")).as("u"))
         .groupBy("u").count().count()
     }
-    spark.stop()
   }
 }

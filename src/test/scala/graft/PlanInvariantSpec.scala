@@ -137,7 +137,7 @@ class PlanInvariantSpec extends SparkSpec {
       val v = violations(plan).filterNot(msg =>
         SanctionedBnlj.contains(name) &&
           msg.contains("BroadcastNestedLoopJoin"))
-      Housekeeping.release(audit)
+      Scope.releaseRoot()
       v.map(name + ": " + _)
     }
     assert(bad.isEmpty, bad.mkString("\n"))
@@ -207,7 +207,7 @@ class PlanInvariantSpec extends SparkSpec {
         .queryExecution.executedPlan
       val v = globalWindows(plan)
         .filterNot(_ => SanctionedGlobalWindow.contains(name))
-      Housekeeping.release(audit)
+      Scope.releaseRoot()
       v.map(name + ": " + _)
     }
     assert(bad.isEmpty, bad.mkString("\n"))

@@ -134,7 +134,7 @@ class Round15Spec extends SparkSpec {
     val smj = ps.linesIterator.filter(_.contains("SortMergeJoin")).toSeq
     assert(smj.forall(_.contains("_ps")),
       s"unsalted sort-merge join on the hot key:\n${smj.mkString("\n")}")
-    graft.Housekeeping.release(spark)
+    graft.Scope.releaseRoot()
   }
 
   test("compactLake: row identity and EXACTLY one output file per " +

@@ -308,13 +308,14 @@ class Round18Spec extends SparkSpec {
     sc.addSparkListener(holder)
     try {
       for ((name, run) <- callers) {
-        val before = sc.getPersistentRDDs.size
-        run()
-        val grown = sc.getPersistentRDDs.size - before
-        // what may stay is the operator's own persisted inputs plus the
-        // final state (7 for assignCanonical, the most); without the
-        // release every call would also keep its superseded rounds
-        assert(grown <= 8, s"$name: resident frames grew by $grown")
+        sc.getPersistentRDDs.values.foreach(held.add)
+        val before = sc.getPersistentRDDs.keySet
+        Scope.run(run())
+        // the scope releases the superseded rounds, the final state and
+        // every input the operator held, and nothing it did not hold
+        val after = sc.getPersistentRDDs.keySet
+        assert(after == before, s"$name: left ${after diff before}, " +
+          s"dropped ${before diff after}")
       }
     } finally {
       sc.removeSparkListener(holder)

@@ -129,7 +129,7 @@ class Round21Spec extends SparkSpec {
     assert(out(2L) === ((4L, 2L, "Delta here. Epsilon.")))
     // doc 3 loses its only sentence → empty rewrite, row kept
     assert(out(3L) === ((1L, 1L, "")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Similarity.knnRecallIvf vs knnRecall (round-9 verdict #1) ---
@@ -143,7 +143,7 @@ class Round21Spec extends SparkSpec {
     val ivf = mean(Similarity.knnRecallIvf(e))
     // measured 0.462 vs 0.098 — the floor leaves contention headroom
     assert(ivf >= 2 * lsh, s"ivf=$ivf lsh=$lsh")
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- EventsStream.neardupIngest sequential semantics ---
@@ -179,7 +179,7 @@ class Round21Spec extends SparkSpec {
     assert(out(45L) === ((0L, 1L, false)))
     // 35 hits survivor 30 via the index (45 dropped, not counted)
     assert(out(35L) === ((1L, 0L, false)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Relational.cmsEstimate on never-sketched probe keys ---

@@ -45,7 +45,7 @@ class Round22Spec extends SparkSpec {
       spark.read.parquet(s"$dir/documents.parquet"), 25)
     assert(rows(art.select("doc_id", "h")) ===
       rows(oneShot.select("doc_id", "h")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Similarity.knnComponentsIvf ---
@@ -73,7 +73,7 @@ class Round22Spec extends SparkSpec {
     assert(Seq(2L, 4L, 6L).forall(out(_) === 2L))
     // the singleton has no mutual edge — omitted by construction
     assert(!out.contains(20L))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Dedup.semanticDedupBest ---
@@ -100,7 +100,7 @@ class Round22Spec extends SparkSpec {
     // equal quality → lowest id keeps (the semanticDedup tie rule)
     assert(out(2L) && !out(4L))
     assert(out(20L))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- TextStats.corpusCard / piiReport ---
@@ -128,7 +128,7 @@ class Round22Spec extends SparkSpec {
     assert(b.getAs[Long]("n_docs") === 2L)
     assert(b.getAs[Double]("dup_rate") === 0.5)
     assert(b.getAs[Double]("token_share") === 0.32) // 7/22
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("piiReport: per-source counts, rate, and the TOTAL rollup row") {
@@ -147,7 +147,7 @@ class Round22Spec extends SparkSpec {
     assert(t.getAs[Long]("n_docs") === 3L)
     assert(t.getAs[Long]("docs_with_pii") === 2L)
     assert(t.getAs[Double]("pii_rate") === 0.67)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Similarity.embedReport ---
@@ -169,7 +169,7 @@ class Round22Spec extends SparkSpec {
     val l1 = out(1L)
     // centroid of (1,0) and (-1,0) is the zero vector → NULL tightness
     assert(l1.isNullAt(l1.fieldIndex("tightness")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Sampling.mixtureFit (water-filling) ---
@@ -200,7 +200,7 @@ class Round22Spec extends SparkSpec {
       .collect()
     assert(full.forall(_.getAs[Boolean]("capped")))
     assert(full.forall(_.getAs[Double]("rate") === 1.0))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- CompatIo stats index on a PARTITIONED layout (ADVICE r9) ---
@@ -236,7 +236,7 @@ class Round22Spec extends SparkSpec {
     CompatIo.statsIndexAppend(spark, s"$root/data", s"$root/idx", "k")
     assert(CompatIo.readIncrement(spark, s"$root/data", s"$root/idx")
       .count() === 0L)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Curate.budgetPrep composition ---
@@ -260,7 +260,7 @@ class Round22Spec extends SparkSpec {
       r.getAs[Long]("n_docs")).groupBy(_._1)
       .map { case (s, xs) => s -> xs.map(_._2).sum }
     assert(bySrc === Map("a" -> 1L, "b" -> 1L))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Dedup.crossSourceMatrix ---
@@ -281,6 +281,6 @@ class Round22Spec extends SparkSpec {
     assert(out(("a", "b")) === 2L)
     assert(out(("b", "b")) === 1L)
     assert(!out.contains(("a", "a")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 }

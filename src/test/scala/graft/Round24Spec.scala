@@ -223,7 +223,7 @@ class Round24Spec extends SparkSpec {
       rows(Relational.cusumChangepoint(
         ev.filter(col("event_id") % 3 =!= 2))))
     assert(!new java.io.File(s"$artDir/v0").isDirectory)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- TextStats.winnowPairsVerified ---
@@ -483,7 +483,7 @@ class Round24Spec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$artDir/v1/fit")) ===
       rows(oneShot(docs.filter(col("doc_id") % 3 =!= 2))))
     assert(!new java.io.File(s"$artDir/v0").isDirectory)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Dedup.boilerplateRewrite ---

@@ -137,7 +137,7 @@ class Round25Spec extends SparkSpec {
       val k = math.floor(w * 1e12 + 0.5) / 1e12
       assert(w === k, s"weight off the 1e-12 grid: $w")
     }
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("lrAuc: perfect separation scores auc 1.0; a single-class " +
@@ -156,7 +156,7 @@ class Round25Spec extends SparkSpec {
     val mono = (0L until 20L).map(i => (i, "alpha beta " * 5, "en"))
       .toDF("doc_id", "text", "lang")
     assert(Classify.lrAuc(mono).collect().head.isNullAt(2))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("lrScoreFromArtifact: scores served from the persisted weight " +
@@ -174,7 +174,7 @@ class Round25Spec extends SparkSpec {
     assert(rows(Classify.lrScoreFromArtifact(sep, dir)
         .orderBy("doc_id")) ===
       rows(Classify.lrScore(sep).orderBy("doc_id")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("lrScoreIngest: per-batch streamed scoring from the persisted " +
@@ -188,7 +188,7 @@ class Round25Spec extends SparkSpec {
       "documents")
     assert(rows(got.orderBy("doc_id")) ===
       rows(graft.operators.Classify.lrScore(d).orderBy("doc_id")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("seasonalForecast/seasonalBacktest: y(t-7) projects exactly " +
@@ -221,7 +221,7 @@ class Round25Spec extends SparkSpec {
     // window, so only the lookback hit at t = day 10 errs (|0-1|)
     // → MAE 1/14, round2 = 0.07
     assert(bt("B") === ((14L, 0.07)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("bootstrapMeanCI: the interval brackets the mean, is " +
@@ -242,7 +242,7 @@ class Round25Spec extends SparkSpec {
     assert(rc.getAs[Double]("ci_lo") === 7.0 &&
       rc.getAs[Double]("ci_hi") === 7.0 &&
       rc.getAs[Double]("mean") === 7.0)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("forecastMaintain: the streaming-maintained forecast equals " +
@@ -264,7 +264,7 @@ class Round25Spec extends SparkSpec {
       rows(Relational.seasonalForecast(
           ev.filter(col("event_id") % 3 =!= 2))
         .orderBy("event_type", "day")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("hits: in a bipartite star, the supplier bought by every " +
@@ -292,7 +292,7 @@ class Round25Spec extends SparkSpec {
     val hubs = Seq(1L, 2L, 3L, 4L).map(c => out(("customer", c)))
     assert(hubs.take(3).forall(_ < hubs(3)),
       s"widest-basket customer not top hub: $out")
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("cdcDedupRewrite: an exact clone loses every chunk to the " +
@@ -323,7 +323,7 @@ class Round25Spec extends SparkSpec {
     assert(out(3L).getAs[Long]("n_dropped") >= 1L,
       s"no chunk of the shifted near-copy deduped: ${out(3L)}")
     assert(out(3L).getAs[String]("text_clean").contains("inserted"))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("derivedClusters: the mean cluster population is capped by " +
@@ -369,7 +369,7 @@ class Round25Spec extends SparkSpec {
     val byCid = out.collect().groupBy(_.getAs[Long]("cid"))
     assert(byCid.values.forall(_.exists(_.getAs[Boolean]("keep"))))
     out.unpersist()
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("readSnapshot: additive schema evolution cannot leak into a " +

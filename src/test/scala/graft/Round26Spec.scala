@@ -47,7 +47,7 @@ class Round26Spec extends SparkSpec {
     assert(out.head.getAs[Long]("pos_cnt") === 0L)
     assert(out.head.getAs[Long]("neg_cnt") === 20L)
     assert(out.head.isNullAt(out.head.fieldIndex("auc")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- composed pipeline (VERDICT r12 task 2) ---
@@ -73,7 +73,7 @@ class Round26Spec extends SparkSpec {
     // the artifact the pipeline served from equals lrTrain's weights
     assert(rows(spark.read.parquet(dir).orderBy("j")) ===
       rows(Classify.lrTrain(sep).orderBy("j")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- multiclass teacher (VERDICT r12 task 4) ---
@@ -87,7 +87,7 @@ class Round26Spec extends SparkSpec {
     assert(acc >= 0.95, s"separable multiclass accuracy $acc < 0.95")
     assert(rows(Classify.lrMulticlass(sep)) ===
       rows(Classify.lrMulticlass(sep)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("lrMulticlass: a token-less document takes teacher class 0 " +
@@ -100,7 +100,7 @@ class Round26Spec extends SparkSpec {
     assert(r.length === 1)
     assert(r.head.getAs[Long]("y") === 0L)
     assert(r.head.getAs[Long]("pred") >= 0L)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- winnow artifact split (VERDICT r12 task 3) ---
@@ -113,7 +113,7 @@ class Round26Spec extends SparkSpec {
     Dedup.winnowPairsWrite(d, dir)
     assert(rows(Dedup.winnowRewriteFromIndex(d, dir)) ===
       rows(Dedup.winnowRewrite(d)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- weekly-seasonal forecast family (VERDICT r12 task 5) ---
@@ -136,7 +136,7 @@ class Round26Spec extends SparkSpec {
     val b = got.filter(_.getString(0) == "b")
     assert(b.map(r => r.getLong(1) -> r.getAs[Double]("yhat")).toMap ===
       (28L to 34L).map(f => f -> (if (f == 31L) 1.25 else 0.0)).toMap)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("seasonalAnomaly: a spike against its own weekday baseline is " +
@@ -157,7 +157,7 @@ class Round26Spec extends SparkSpec {
     // short history (< minBaseline) scores NULL, never anomalous
     assert(got.filter(col("base_n") < 3 && col("z").isNotNull)
       .count() === 0L)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("periodDetect: a weekly pulse train detects period 7 (the " +
@@ -175,7 +175,7 @@ class Round26Spec extends SparkSpec {
     assert(got.head.getAs[Long]("period") === 7L)
     // L=7: 3 peak-peak pairs of 25 + 18 unit pairs over 21 = 4.43
     assert(got.head.getAs[Double]("score") === 4.43)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("seasonalMeanMaintain: the streamed daily-counter controller " +
@@ -186,7 +186,7 @@ class Round26Spec extends SparkSpec {
       "/root/testdata/sf0.001", s"$root/stage", s"$root/art")
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
     assert(rows(got) === rows(Relational.seasonalMeanForecast(ev)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- ADVICE r12: manifest schema pin + bloom sentinel ---
@@ -263,6 +263,6 @@ class Round26Spec extends SparkSpec {
     assert(bad.isEmpty,
       "boundary-sitting log-probs (cast vs floor grid): " +
         bad.take(5).mkString("; "))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 }

@@ -54,19 +54,19 @@ class Round27Spec extends SparkSpec {
     // weight, above every selected es doc
     assert(byId(999L) > 0L)
     esScores.foreach(s => assert(byId(999L) > s))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("dsirSelect: deterministic across runs and pure top-k " +
     "(k larger than the corpus returns everything with features)") {
     val a = rows(Sampling.dsirSelect(dsirCorpus, k = 10))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     val b = rows(Sampling.dsirSelect(dsirCorpus, k = 10))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     assert(a === b)
     val all = Sampling.dsirSelect(dsirCorpus, k = 10000).count()
     assert(all === 81L)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Classify.lrCalibration ---
@@ -99,7 +99,7 @@ class Round27Spec extends SparkSpec {
     val hi = byB(byB.keys.max)
     val lo = byB(byB.keys.min)
     assert(hi.getAs[Double]("frac_pos") > lo.getAs[Double]("frac_pos"))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Graph.randomWalks ---
@@ -134,7 +134,7 @@ class Round27Spec extends SparkSpec {
     // deterministic
     val again = Graph.randomWalks(orders, lineitem, steps = 3)
     assert(rows(walks) === rows(again))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("walkSkipGrams: pair count = sum over positions of in-window " +
@@ -158,7 +158,7 @@ class Round27Spec extends SparkSpec {
       assert(walks((st, sp)) === r.getAs[Long]("center"))
       assert(walks((st, sp + off)) === r.getAs[Long]("context"))
     }
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("dsirSelectAgainst: scores only the raw corpus, prefers the " +
@@ -179,19 +179,19 @@ class Round27Spec extends SparkSpec {
     assert(byId.contains(999L))
     byId.collect { case (id, s) if id < 999 => s }
       .foreach(s => assert(byId(999L) > s))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     val again = rows(Sampling.dsirSelectAgainst(raw, target, k = 41))
     assert(again === rows(
       Sampling.dsirSelectAgainst(raw, target, k = 41)))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("dsirResample: deterministic Gumbel race; the Gumbel noise " +
     "(±~3 log units) cannot flip the huge target/non-target gap") {
     val a = rows(Sampling.dsirResample(dsirCorpus, k = 45))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     val b = rows(Sampling.dsirResample(dsirCorpus, k = 45))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     assert(a === b)
     val sel = Sampling.dsirResample(dsirCorpus, k = 45).collect()
     assert(sel.length === 45)
@@ -200,7 +200,7 @@ class Round27Spec extends SparkSpec {
     assert(byId.contains(999L))
     byId.collect { case (id, g) if id >= 100 && id < 140 => g }
       .foreach(g => assert(byId(999L) > g))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Relational.conformalForecast ---
@@ -220,7 +220,7 @@ class Round27Spec extends SparkSpec {
     assert(out.head.getAs[Long]("q") === 0L)
     assert(out.head.getAs[Double]("coverage") === 1.0)
     assert(out.head.getAs[Long]("n_test") === 14L)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
     val real = Relational.conformalForecast(
       Tables.load(spark, "/root/testdata/sf0.001", "events")).collect()
     assert(real.nonEmpty)
@@ -231,7 +231,7 @@ class Round27Spec extends SparkSpec {
       assert(c >= 0.0 && c <= 1.0)
       assert(r.getAs[Long]("n_cal") > 0L)
     }
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("conformalMaintain: the 3-batch maintained interval equals the " +
@@ -243,7 +243,7 @@ class Round27Spec extends SparkSpec {
       Tables.load(spark, dir, "events"))
     assert(rows(maintained) === rows(batch))
     assert(rows(maintained).nonEmpty)
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Relational.abTest ---
@@ -273,7 +273,7 @@ class Round27Spec extends SparkSpec {
     assert(r.getAs[Double]("mean_a") > r.getAs[Double]("mean_b"))
     assert(r.getAs[Double]("z_q") > 0.0)
     assert(r.getAs[Boolean]("significant"))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   test("abTestCuped: regressing out a predictive pre-period covariate " +
@@ -306,7 +306,7 @@ class Round27Spec extends SparkSpec {
     assert(math.abs(cuped.getAs[Double]("z_q")) >
       math.abs(plain.getAs[Double]("z_q")),
       "CUPED must sharpen the z of a covariate-noised effect")
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 
   // --- Sampling.dsirIndexWrite / dsirScoreFromIndex ---
@@ -320,6 +320,6 @@ class Round27Spec extends SparkSpec {
     val inPlan = Sampling.dsirSelect(dsirCorpus, k = 10000)
     assert(rows(served.select("doc_id", "n_feats", "logw_q")) ===
       rows(inPlan.select("doc_id", "n_feats", "logw_q")))
-    Housekeeping.release(spark)
+    Scope.releaseRoot()
   }
 }
