@@ -295,31 +295,23 @@ class Round18Spec extends SparkSpec {
       "ssspBounded" -> (() => Graph.ssspBounded(src, wedges, 8).count()),
       "assignCanonical" -> (() => Dedup.assignCanonical(docs,
         threshold = 0.5, maxIter = 8, driverCcMaxEdges = 0L).count()))
-    // hold every persisted RDD strongly while the callers run: the
-    // context's persisted-RDD map has weak values and its cleaner
-    // unpersists collected frames, so a GC landing mid-call would
-    // otherwise hide a missing release
-    val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
-    val holder = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sc.getPersistentRDDs.values.foreach(held.add)
-    }
-    sc.addSparkListener(holder)
-    try {
+    holdingRdds { grab =>
       for ((name, run) <- callers) {
-        sc.getPersistentRDDs.values.foreach(held.add)
+        grab()
         val before = sc.getPersistentRDDs.keySet
-        Scope.run(run())
-        // the scope releases the superseded rounds, the final state and
-        // every input the operator held, and nothing it did not hold
+        val grown = Scope.run {
+          run()
+          sc.getPersistentRDDs.size - before.size
+        }
+        // inside the scope only the operator's held inputs and final
+        // state stay (7 for assignCanonical, the most): each loop has
+        // released its superseded rounds
+        assert(grown <= 8, s"$name: resident frames grew by $grown")
+        // the scope then releases the rest, and nothing it did not hold
         val after = sc.getPersistentRDDs.keySet
         assert(after == before, s"$name: left ${after diff before}, " +
           s"dropped ${before diff after}")
       }
-    } finally {
-      sc.removeSparkListener(holder)
-      held.clear()
     }
   }
 

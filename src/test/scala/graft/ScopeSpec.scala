@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -20,25 +19,6 @@ class ScopeSpec extends SparkSpec {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs
     .keySet.toSet
-
-  /** Run `body` with every persisted RDD held strongly: the context's
-    * persisted-RDD map has weak values and its cleaner unpersists
-    * collected frames, so a GC landing mid-check would otherwise hide a
-    * missing release or fake a dropped one. */
-  private def holdingRdds[T](body: (() => Unit) => T): T = {
-    val sc = spark.sparkContext
-    val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
-    def grab(): Unit = sc.getPersistentRDDs.values.foreach(held.add)
-    val holder = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = grab()
-    }
-    sc.addSparkListener(holder)
-    try body(() => grab())
-    finally {
-      sc.removeSparkListener(holder)
-      held.clear()
-    }
-  }
 
   test("every gate's scope releases all it held, and nothing else") {
     assume(new java.io.File(Sf).isDirectory, s"$Sf is absent")
@@ -61,11 +41,11 @@ class ScopeSpec extends SparkSpec {
           .orElse(Option.when(!cache.isEmpty)("the cache manager holds plans"))
         // judge the next gate alone
         if (problem.isDefined) {
+          Scope.releaseRoot()
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values
             .filterNot(r => before(r.id)).foreach(_.unpersist())
         }
-        Scope.releaseRoot()
         problem.map(p => s"${g.name}: $p")
       }
     }
